@@ -109,7 +109,10 @@ object BooleanQuery {
     // deterministic pair set; pinning moves only WHERE materialization
     // happens), and the combination below becomes a shallow DAG over
     // pinned inputs. Par.run joins its workers before returning, so
-    // the slot writes are safely published.
+    // the slot writes are safely published. MUST_NOT beside a positive
+    // clause is consumed once, by the left_anti the final pin below
+    // materializes, so it stays unpinned there (one pin, not two).
+    val foldNot = clauses.must.isDefined || clauses.should.isDefined
     val slots = Array.fill[Option[DataFrame]](3)(None)
     Par.run(spark, Seq(
       clauses.must.map(m => () =>
@@ -118,8 +121,10 @@ object BooleanQuery {
         slots(1) = Some(Frontier.pin(norm(
           LexIndex.probeShould(spark, name, sm, clauses.minShould, asOf)
             .select("qid", "doc_id"))))),
-      clauses.mustNot.map(mn => () =>
-        slots(2) = Some(Frontier.pin(norm(phrasePairs(spark, name, mn, asOf)))))
+      clauses.mustNot.map(mn => () => {
+        val neg = norm(phrasePairs(spark, name, mn, asOf))
+        slots(2) = Some(if (foldNot) neg else Frontier.pin(neg))
+      })
     ).flatten)
     val (mustPairs, shouldPairs, notPairs) = (slots(0), slots(1), slots(2))
     // the qid universe each positive clause CONSTRAINS comes from its

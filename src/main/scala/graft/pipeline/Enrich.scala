@@ -1,7 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.api.java.UDF1
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** The reference's enrichment DAG, re-expressed as declarative Spark
   * columns (SURVEY.md §2 operator rows P1-P6, F1-F12):
@@ -10,13 +12,22 @@ import org.apache.spark.sql.functions._
   *   gate (≥0.4) → topic (multi-label ≥0.5 + top-1 + union fix-up) →
   *   enrich projection → subject routing
   *
-  * Two equivalent physical paths:
-  *  - [[enrichColumns]]: pure built-in Column expressions — fuses into a
-  *    single WholeStageCodegen span, no shuffle, embarrassingly parallel
-  *    at any scale (the narrow-only plan SURVEY.md §3.2 calls for).
-  *  - [[enrichTyped]]: `mapPartitions` with a per-executor classifier —
-  *    the deployment shape a real ONNX model needs (batched, amortized
-  *    session init). Output is bit-identical to the Column path.
+  * Two equivalent physical paths, chosen by how often the caller's
+  * plan is built:
+  *  - [[enrichColumns]]: pure built-in Column expressions, one
+  *    WholeStageCodegen span with no shuffle. The batch rows (e01,
+  *    e03-e08) use it: a batch query is planned and code-generated
+  *    once, so the ~1,300-node expression tree is paid once per query
+  *    and the oracle SQL mirrors it node for node.
+  *  - [[classify]]: the same DAG as one compiled Scala call per text.
+  *    [[enrichTyped]] runs it in `mapPartitions` (e02, the deployment
+  *    shape of a real ONNX session), and the stream
+  *    (`StreamingEnrich.enrich`) runs it through [[classifyCall]],
+  *    because Structured Streaming re-optimizes and re-codegens the
+  *    whole plan every micro-batch: one call node costs that per-epoch
+  *    re-planning nothing, where the inlined Column tree made it the
+  *    largest share of a small batch.
+  *  Both paths are bit-identical (EnrichSpec, StreamingEnrichSpec).
   */
 object Enrich {
   import StandIn._
@@ -144,6 +155,39 @@ object Enrich {
       spark.sparkContext.longAccumulator("graft.enriched_rows"))
   }
 
+  /** One text's enrichment: the columns [[enrichColumns]] adds, in its
+    * order, minus the `topics_str` and `subject` derived from them. */
+  final case class Classified(sentiment: String, confidence: Double,
+      probs: Array[Double], topTopic: String, topConfidence: Double,
+      topics: Seq[String]) {
+    def topicsStr: String = topics.mkString(",")
+    def subject: String = s"bluesky.enriched.$sentiment.$topTopic"
+  }
+
+  /** The per-text classifier both per-row callers share: P2 blank
+    * filter, sentiment, the P3 confidence gate, then topics. None for a
+    * blank or sub-threshold text. Blank means what `length(trim(t)) > 0`
+    * rejects in the Column path: only spaces (Spark's `trim` strips
+    * ASCII 32 alone). */
+  def classify(text: String,
+      timers: Option[StageTimers] = None): Option[Classified] =
+    if (text == null || text.forall(_ == ' ')) None
+    else {
+      val t0 = if (timers.isDefined) System.nanoTime() else 0L
+      val (lab, conf, probs) = StandIn.sentiment(text)
+      timers.foreach(_.sentimentNs.add(System.nanoTime() - t0))
+      if (conf < SentimentThreshold) None
+      else {
+        val t1 = if (timers.isDefined) System.nanoTime() else 0L
+        val (tops, top, tconf) = StandIn.topics(text)
+        timers.foreach { t =>
+          t.topicNs.add(System.nanoTime() - t1)
+          t.rows.add(1)
+        }
+        Some(Classified(lab, conf, probs, top, tconf, tops))
+      }
+    }
+
   /** The mapPartitions deployment shape: batched, per-executor pure
     * model, no shuffle. Bit-identical to [[enrichColumns]]. */
   def enrichTyped(spark: SparkSession, docs: DataFrame,
@@ -154,28 +198,45 @@ object Enrich {
       .mapPartitions { it =>
         it.grouped(64).flatMap { batch => // batch like a real ONNX session would
           batch.flatMap { case (id, text) =>
-            if (text == null || text.trim.isEmpty) None
-            else {
-              val t0 = if (timers.isDefined) System.nanoTime() else 0L
-              val (lab, conf, probs) = StandIn.sentiment(text)
-              timers.foreach(_.sentimentNs.add(System.nanoTime() - t0))
-              if (conf < SentimentThreshold) None
-              else {
-                val t1 = if (timers.isDefined) System.nanoTime() else 0L
-                val (tops, top, tconf) = StandIn.topics(text)
-                timers.foreach { t =>
-                  t.topicNs.add(System.nanoTime() - t1)
-                  t.rows.add(1)
-                }
-                Some(EnrichedDoc(id, lab, conf, probs(0), probs(1), probs(2),
-                  tops.mkString(","), top, tconf,
-                  s"bluesky.enriched.$lab.$top"))
-              }
-            }
+            classify(text, timers).map(c => EnrichedDoc(id, c.sentiment,
+              c.confidence, c.probs(0), c.probs(1), c.probs(2), c.topicsStr,
+              c.topTopic, c.topConfidence, c.subject))
           }
         }
       }
   }
+
+  /** The columns [[enrichColumns]] adds, with its names, types and
+    * nullability, as the element of [[classifyCall]]'s array. */
+  private val ClassifiedSchema: StructType = StructType(Seq(
+    StructField("sentiment", StringType, nullable = false),
+    StructField("confidence", DoubleType),
+    StructField("p_negative", DoubleType),
+    StructField("p_neutral", DoubleType),
+    StructField("p_positive", DoubleType),
+    StructField("top_topic", StringType),
+    StructField("top_confidence", DoubleType),
+    StructField("topics", ArrayType(StringType), nullable = false),
+    StructField("topics_str", StringType, nullable = false),
+    StructField("subject", StringType, nullable = false)))
+
+  /** [[classify]] as one call node: a 0-or-1-element array of
+    * [[ClassifiedSchema]] rows, to be unnested with `inline`. A
+    * Generate runs its generator exactly once per input row. A struct
+    * UDF behind `filter(isNotNull)` would not: PushDownPredicates
+    * substitutes the call into the Filter and the model runs twice.
+    * Keep the call the generator's direct input, too: over an
+    * attribute, InferFiltersFromGenerate adds the same kind of
+    * duplicating filter. */
+  def classifyCall(text: Column, timers: Option[StageTimers] = None): Column =
+    udf(new UDF1[String, Seq[Row]] {
+      override def call(t: String): Seq[Row] =
+        classify(t, timers).map(c => Row(c.sentiment, c.confidence,
+          c.probs(0), c.probs(1), c.probs(2), c.topTopic, c.topConfidence,
+          c.topics, c.topicsStr, c.subject)).toList
+    }, ArrayType(ClassifiedSchema, containsNull = false))
+      .asNonNullable()
+      .withName("classify")(text)
 
   // ------------------------------------------------------------------
   // DuckDB oracle SQL for the same DAG, generated from the same

@@ -196,11 +196,11 @@ final class NatsMicroBatchStream(options: Map[String, String])
 
 final class NatsPartitionReader(p: NatsInputPartition)
     extends PartitionReader[InternalRow] {
-  private val consumer = StubJetStream.info(p.stream)
+  private val stream = StubJetStream.info(p.stream)
     .getOrElse(throw new IllegalStateException(s"stream ${p.stream} vanished"))
-    .consumer(p.consumer)
-  private val it = StubJetStream.info(p.stream).get
-    .fetch(p.startExclusive, p.endInclusive, p.subjectFilter).iterator
+  private val consumer = stream.consumer(p.consumer)
+  private val it =
+    stream.fetch(p.startExclusive, p.endInclusive, p.subjectFilter).iterator
   private var cur: StubMsg = _
 
   override def next(): Boolean = { val has = it.hasNext; if (has) cur = it.next(); has }

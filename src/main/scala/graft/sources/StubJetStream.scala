@@ -74,10 +74,14 @@ final class StubPublishTimeout(msg: String) extends RuntimeException(msg)
 final class StubStream(val name: String, val subjects: Seq[String],
     val maxMsgs: Long, val duplicateWindowMs: Long) {
 
-  private val msgs = mutable.ArrayBuffer[StubMsg]()
+  // stored messages, oldest first. Sequences are contiguous (only a
+  // stored message takes one), so sequence s sits at s - first.seq and
+  // discard-old is a removeHead.
+  private val msgs = mutable.ArrayDeque[StubMsg]()
   private var seqCounter = 0L
-  // msgId -> (original seq, publish time) for the duplicate window
-  private val dupIndex = mutable.HashMap[String, (Long, Long)]()
+  // msgId -> (original seq, publish time) for the duplicate window, in
+  // publish order: ids older than the window leave from the front
+  private val dupIndex = mutable.LinkedHashMap[String, (Long, Long)]()
   // cumulative publish counters (A1/A4: posts_published_total,
   // duplicate detections, publish_timeout occurrences)
   val publishedTotal = new java.util.concurrent.atomic.LongAdder
@@ -99,6 +103,8 @@ final class StubStream(val name: String, val subjects: Seq[String],
         subjects.exists(StubJetStream.subjectMatches(_, subject)),
         s"subject $subject not bound to stream $name")
       val now = clock()
+      while (dupIndex.nonEmpty && now - dupIndex.head._2._2 >= duplicateWindowMs)
+        dupIndex.remove(dupIndex.head._1)
       if (msgId != null) dupIndex.get(msgId) match {
         case Some((seq, at)) if now - at < duplicateWindowMs =>
           duplicateTotal.increment()
@@ -108,8 +114,11 @@ final class StubStream(val name: String, val subjects: Seq[String],
       }
       seqCounter += 1
       msgs += StubMsg(seqCounter, subject, data, msgId, now)
-      if (msgId != null) dupIndex(msgId) = (seqCounter, now)
-      while (msgs.length > maxMsgs) msgs.remove(0) // discard-old
+      if (msgId != null) {
+        dupIndex.remove(msgId) // re-inserted at the back: publish order
+        dupIndex(msgId) = (seqCounter, now)
+      }
+      while (msgs.length > maxMsgs) msgs.removeHead() // discard-old
       publishedTotal.increment()
       PubAck(name, seqCounter, duplicate = false)
     }
@@ -119,27 +128,51 @@ final class StubStream(val name: String, val subjects: Seq[String],
   /** Messages with start < seq <= end whose subject matches. */
   def fetch(startExclusive: Long, endInclusive: Long,
       subjectFilter: String): Seq[StubMsg] = synchronized {
-    msgs.filter(m => m.seq > startExclusive && m.seq <= endInclusive &&
-      StubJetStream.subjectMatches(subjectFilter, m.subject)).toSeq
+    if (msgs.isEmpty) Nil
+    else {
+      val first = msgs.head.seq
+      val from = math.max(startExclusive + 1, first) - first
+      val until = math.min(endInclusive, seqCounter) - first + 1
+      if (from >= until) Nil
+      else msgs.slice(from.toInt, until.toInt)
+        .filter(m => StubJetStream.subjectMatches(subjectFilter, m.subject))
+        .toList
+    }
   }
+
+  /** Message ids the duplicate window still tracks. */
+  private[sources] def trackedMsgIds: Int = synchronized(dupIndex.size)
 
   def allMessages: Seq[StubMsg] = synchronized(msgs.toSeq)
 
   // ---- durable consumers ---------------------------------------------
   final class Consumer(val durable: String) {
     private var committedSeq = 0L
+    // delivery counts above the acked floor only: an acked sequence
+    // needs no count, its next delivery is a redelivery
     private val deliveries = mutable.HashMap[Long, Int]()
     def committed: Long = StubStream.this.synchronized(committedSeq)
     /** Explicit ack up to seq (offset commit). */
     def ack(seq: Long): Unit = StubStream.this.synchronized {
-      if (seq > committedSeq) committedSeq = seq
+      if (seq > committedSeq) {
+        committedSeq = seq
+        deliveries.filterInPlace((s, _) => s > seq)
+      }
     }
-    /** Record a delivery; returns num_delivered (1 = first). */
+    /** Record a delivery; returns num_delivered (1 = first). A sequence
+      * at or below the acked floor was delivered before: it reports 2,
+      * a redelivery, without keeping a count. */
     def recordDelivery(seq: Long): Int = StubStream.this.synchronized {
-      val n = deliveries.getOrElse(seq, 0) + 1
-      deliveries(seq) = n
-      n
+      if (seq <= committedSeq) 2
+      else {
+        val n = deliveries.getOrElse(seq, 0) + 1
+        deliveries(seq) = n
+        n
+      }
     }
+    /** Sequences with a delivery count held. */
+    private[sources] def trackedDeliveries: Int =
+      StubStream.this.synchronized(deliveries.size)
     /** consumer_info.num_pending (A9 backlog gauge). */
     def numPending: Long = StubStream.this.synchronized {
       math.max(0L, seqCounter - committedSeq)

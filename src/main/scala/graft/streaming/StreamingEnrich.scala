@@ -24,6 +24,14 @@ import graft.pipeline.Enrich
   * (T2/S6), making the sink effectively-once; malformed JSON lands in
   * `_corrupt`, is counted via `observe`, and never fails the stream
   * (T8 poison pills).
+  *
+  * Enrichment path: every entry point here ([[pipeline]], [[runNats]],
+  * [[runParquet]], and `AuthorStats` over [[enrich]]) classifies a post
+  * with the compiled per-row call ([[Enrich.classifyCall]]), not the
+  * Column tree the batch rows use. A batch query plans and codegens
+  * its tree once; a stream re-plans and re-codegens the whole plan on
+  * every micro-batch, so the stream keeps its per-epoch plan small and
+  * puts the model behind one call.
   */
 object StreamingEnrich {
 
@@ -58,10 +66,22 @@ object StreamingEnrich {
         sum(when(col("_corrupt").isNotNull, 1L).otherwise(0L)).as("poison_total"))
 
   /** Enrichment + EnrichedPost shape (types.py:36-41): nested sentiment
-    * / topics structs, processed_at epoch seconds, processor tag. */
-  def enrich(parsed: DataFrame): DataFrame = {
+    * / topics structs, processed_at epoch seconds, processor tag.
+    *
+    * Each valid post is classified by ONE compiled call
+    * ([[Enrich.classifyCall]], unnested by `inline`), not by the
+    * inlined [[Enrich.enrichColumns]] tree: every micro-batch gets a
+    * fresh IncrementalExecution that re-optimizes and re-codegens the
+    * whole plan, and the Column tree made that ~1,350 expression nodes
+    * per epoch for batches of a few dozen posts. Output columns, types
+    * and values are the Column path's (StreamingEnrichSpec pins all
+    * three). `timers`, when given, count the classifier's calls and
+    * time its two models. */
+  def enrich(parsed: DataFrame,
+      timers: Option[Enrich.StageTimers] = None): DataFrame = {
     val valid = parsed.filter(col("_corrupt").isNull)
-    Enrich.enrichColumns(valid)
+    valid.select(col("*"),
+        inline(Enrich.classifyCall(Enrich.extractText(valid), timers)))
       .withColumn("sentiment_data", struct(
         col("sentiment").as("sentiment"),
         col("confidence").as("confidence"),
@@ -79,8 +99,9 @@ object StreamingEnrich {
 
   /** Full pipeline: parse → enrich → event-time watermark + idempotent
     * (uri, cid) dedup within the reference's 600s window. */
-  def pipeline(raw: DataFrame): DataFrame =
-    enrich(parse(raw))
+  def pipeline(raw: DataFrame,
+      timers: Option[Enrich.StageTimers] = None): DataFrame =
+    enrich(parse(raw), timers)
       .withColumn("event_ts", to_timestamp(col("created_at")))
       .withWatermark("event_ts", DedupWindow)
       .dropDuplicatesWithinWatermark("uri", "cid")

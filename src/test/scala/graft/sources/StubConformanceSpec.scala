@@ -138,4 +138,41 @@ class StubConformanceSpec extends AnyFunSuite {
     }
     StubJetStream.drop(s.name)
   }
+
+  test("per-message state stays bounded: fetch after discard-old, window eviction, ack pruning") {
+    StubJetStream.drop("graft_conf_bounds")
+    val s = StubJetStream.ensure("graft_conf_bounds", Seq("enriched.>"),
+      maxMsgs = 4L, duplicateWindowMs = 1000L)
+    var now = 0L
+    s.clock = () => now
+    (1 to 10).foreach { i =>
+      s.publish(if (i % 2 == 0) "enriched.even" else "enriched.odd",
+        s"{\"i\":$i}", s"id$i")
+      now += 100L
+    }
+    // discard-old kept seqs 7-10; fetch serves exactly that range
+    assert(s.fetch(0L, 100L, ">").map(_.seq) == Seq(7L, 8L, 9L, 10L))
+    assert(s.fetch(7L, 9L, ">").map(_.seq) == Seq(8L, 9L))
+    assert(s.fetch(2L, 8L, "enriched.even").map(_.seq) == Seq(8L))
+    assert(s.fetch(10L, 20L, ">").isEmpty && s.fetch(0L, 6L, ">").isEmpty)
+    // now = 1000: id1 (t=0) is past the window, id2..id10 are inside it
+    val inside = s.publish("enriched.odd", "{}", "id3")
+    assert(inside.duplicate && inside.seq == 3L)
+    val past = s.publish("enriched.odd", "{}", "id1")
+    assert(!past.duplicate && past.seq == 11L)
+    assert(s.fetch(10L, 11L, ">").map(_.data) == Seq("{}"))
+    // expired ids leave the index: only the last window's ids remain
+    now += 5000L
+    s.publish("enriched.odd", "{}", "fresh")
+    assert(s.trackedMsgIds == 1)
+    // delivery counts are kept above the acked floor only
+    val c = s.consumer("bounds")
+    (7L to 11L).foreach(c.recordDelivery)
+    assert(c.recordDelivery(9L) == 2)
+    c.ack(9L)
+    assert(c.trackedDeliveries == 2)
+    assert(c.recordDelivery(8L) == 2) // at the floor: a redelivery
+    assert(c.recordDelivery(10L) == 2 && c.recordDelivery(12L) == 1)
+    StubJetStream.drop(s.name)
+  }
 }

@@ -2,9 +2,11 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.pipeline.{Enrich, StandIn}
 
 class StreamingEnrichSpec extends SparkSpec {
   import spark.implicits._
@@ -135,5 +137,87 @@ class StreamingEnrichSpec extends SparkSpec {
       org.apache.spark.sql.streaming.Trigger.AvailableNow())
     q2.awaitTermination(60000)
     assert(StubJetStream.info("enriched-out").get.allMessages.size == 1)
+  }
+
+  /** ~200 posts over the marker alphabet: all three sentiments, gated
+    * and ungated rows, blank texts, and every text-probe fallback. */
+  private def tiePosts: Seq[String] = {
+    val r = new java.util.SplittableRandom(20240101L)
+    val frags = StandIn.SentimentMarkers.map(_.toString).toSeq ++
+      StandIn.TopicMarkers ++ Seq("post", "the", "é", "漢", "🙂", " ", "\\t")
+    def text(): String = Seq.fill(r.nextInt(40))(frags(r.nextInt(frags.length)))
+      .mkString(" ")
+    (0 until 200).map { i =>
+      val t = text()
+      val field = i % 10 match {
+        case 0 => s""""text":"   ","content":"$t""""
+        case 1 => s""""record":{"text":"$t"}"""
+        case 2 => s""""content":"$t""""
+        case 3 => s""""text":"","body":"$t""""
+        case 4 => s""""message":"$t""""
+        case 5 if i % 20 == 5 => """"text":"  """"
+        case _ => s""""text":"$t""""
+      }
+      s"""{"uri":"at://tie$i","cid":"c$i","author":"a","created_at":"2024-01-01T00:00:00Z",$field}"""
+    } :+ """{"uri":"at://tie-bad""""
+  }
+
+  test("stream path is bit-identical to the Column path, one classifier call per row") {
+    val posts = tiePosts
+    val timers = Enrich.StageTimers(spark)
+    val mem = MemoryStream[String](spark)
+    val q = StreamingEnrich.pipeline(mem.toDF(), Some(timers))
+      .writeStream.format("memory").queryName("tie_out")
+      .outputMode("append").start()
+    posts.grouped(70).foreach { b => mem.addData(b); q.processAllAvailable() }
+    // the executed per-epoch plan holds the classifier exactly once
+    val lastPlan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+      .lastExecution.optimizedPlan
+    val calls = lastPlan.collect { case op =>
+      op.expressions.map(_.collect { case u: ScalaUDF => u }.size).sum }.sum
+    q.stop()
+    assert(calls == 1, lastPlan.treeString)
+
+    val fields = Seq("sentiment", "confidence", "p_negative", "p_neutral",
+      "p_positive", "topics", "top_topic", "top_confidence", "subject")
+    def byUri(df: org.apache.spark.sql.DataFrame) =
+      df.select("uri", fields: _*).collect()
+        .map(r => r.getString(0) -> r.toSeq.tail).toMap
+    val valid = StreamingEnrich.parse(posts.toDF("value"))
+      .filter(col("_corrupt").isNull)
+    // the Column path's columns, types and nullability, in its order
+    val colSchema = Enrich.enrichColumns(valid).schema.fields.toSeq
+    assert(StreamingEnrich.enrich(StreamingEnrich.parse(mem.toDF()))
+      .schema.fields.toSeq.take(colSchema.length) == colSchema)
+    val want = byUri(Enrich.enrichColumns(valid))
+    val got = byUri(spark.table("tie_out"))
+    assert(got.keySet == want.keySet)
+    assert(want.values.map(_.head).toSet == StandIn.SentimentLabels.toSet)
+    want.foreach { case (uri, w) =>
+      got(uri).zip(w).foreach {
+        case (g: Double, e: Double) =>
+          assert(java.lang.Double.doubleToRawLongBits(g) ==
+            java.lang.Double.doubleToRawLongBits(e), s"$uri: $g vs $e")
+        case (g, e) => assert(g == e, uri)
+      }
+    }
+    // once per row: sentiment on every non-blank valid post, topics and
+    // the row counter on every gated one, no more
+    val nonBlank = valid.filter(length(trim(Enrich.extractText(valid))) > 0)
+      .count()
+    assert(want.size > 50 && want.size < nonBlank)
+    assert(timers.sentimentNs.count == nonBlank)
+    assert(timers.topicNs.count == want.size)
+    assert(timers.rows.value == want.size)
+  }
+
+  test("per-epoch plan stays small: the enrichment tree is not inlined") {
+    val mem = MemoryStream[String](spark)
+    val analyzed = StreamingEnrich.wireFormat(
+      StreamingEnrich.pipeline(mem.toDF())).queryExecution.analyzed
+    var n = 0
+    analyzed.foreach(_.expressions.foreach(_.foreach(_ => n += 1)))
+    // 1,357 nodes when the Column tree was inlined; 294 with one call
+    assert(n <= 450, s"$n expression nodes:\n${analyzed.treeString}")
   }
 }
