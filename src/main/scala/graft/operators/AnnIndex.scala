@@ -60,7 +60,7 @@ object AnnIndex {
     * (filtered) probes — the persisted form of [[Similarity.ivfTopK]]'s
     * `scope`. Stamped at build time: an append must supply the same
     * columns, and a probe reads the stamp to know which equi-keys to
-    * add to the cell join. Empty = unscoped (legacy indexes). */
+    * add to the cell join. Empty = unscoped. */
   val ScopeProp = "graft.ann.scope"
   /** Mean distance-to-centroid of the corpus the model was TRAINED on
     * — the drift baseline: [[driftRatio]] divides the current corpus's
@@ -200,6 +200,10 @@ object AnnIndex {
       .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(t))
       .properties
 
+  /** A property every ANN writer stamps on both members. */
+  private def stamp(p: Map[String, String], t: String, k: String): String =
+    p.getOrElse(k, sys.error(s"$t has no $k property — not a graft ANN index"))
+
   private def geometry(spark: SparkSession,
       name: String): (Int, Int, Int, Boolean) =
     geometryOf(spark, cellsTable(spark, name))
@@ -210,20 +214,15 @@ object AnnIndex {
   private def geometryOf(spark: SparkSession,
       ct: String): (Int, Int, Int, Boolean) = {
     val p = props(spark, ct)
-    def g(k: String) = p.getOrElse(k,
-      sys.error(s"$ct has no $k property — not a graft ANN index"))
-      .toInt
-    // pre-residual indexes carry no flag: raw encoding
-    (g(DimProp), g(MProp), g(KsubProp),
-      p.get(ResidualProp).exists(_.toBoolean))
+    def g(k: String) = stamp(p, ct, k).toInt
+    (g(DimProp), g(MProp), g(KsubProp), stamp(p, ct, ResidualProp).toBoolean)
   }
 
-  /** Scope columns stamped at build time (empty for legacy indexes). */
+  /** Scope columns stamped at build time (empty for unscoped indexes). */
   private def scopeOf(spark: SparkSession, name: String): Seq[String] =
     scopeOfTable(spark, cellsTable(spark, name))
   private def scopeOfTable(spark: SparkSession, ct: String): Seq[String] =
-    props(spark, ct).get(ScopeProp)
-      .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
+    stamp(props(spark, ct), ct, ScopeProp).split(",").toSeq.filter(_.nonEmpty)
 
   /** The frozen model, loaded (tiny: nCells + m·ksub vectors). */
   private def loadModel(spark: SparkSession, name: String,
@@ -500,9 +499,8 @@ object AnnIndex {
     val mt0 = modelTable(spark, name)
     val (dim, m, ksub, residual) = geometry(spark, name)
     val p = props(spark, t)
-    val nCells = p.getOrElse(NCellsProp,
-      sys.error(s"$t has no $NCellsProp property")).toInt
-    val baseDist = p.getOrElse(BaseDistProp, "")
+    val nCells = stamp(p, t, NCellsProp).toInt
+    val baseDist = stamp(p, t, BaseDistProp)
     val scope = scopeOf(spark, name) // carried: a lost stamp would
     // tombstoned deletions become physical here; captured PINNED up
     // front so the post-flip clear subtracts exactly this set — a
@@ -519,8 +517,8 @@ object AnnIndex {
       Par.run(spark, Seq(
         // explicit task count: repartition(col) with no count is
         // AQE-coalescible, and at small volumes AQE folds the rewrite into
-        // ONE task writing every cell directory serially (the ShardProfile
-        // finding, same class as Sharding.writeTasks)
+        // ONE task writing every cell directory serially (SCALE.md's
+        // round-11 shard-write profile, same class as Sharding.writeTasks)
         () => src.repartition(spark.sessionState.conf.numShufflePartitions,
             col("cell"))
           .write.format("parquet").partitionBy("cell").saveAsTable(ct),
@@ -570,10 +568,8 @@ object AnnIndex {
   def driftRatio(spark: SparkSession, name: String,
       emb: DataFrame): Double = {
     val (_, m, _, _) = geometry(spark, name)
-    val base = props(spark, cellsTable(spark, name)).get(BaseDistProp)
-      .filter(_.nonEmpty).map(_.toDouble)
-      .getOrElse(sys.error(s"index $name predates the $BaseDistProp " +
-        "stamp — rebuild it with writeAnnIndex to enable drift tracking"))
+    val ct = cellsTable(spark, name)
+    val base = stamp(props(spark, ct), ct, BaseDistProp).toDouble
     val (cents0, _) = loadModel(spark, name, m)
     val cents = spark.sparkContext.broadcast(cents0)
     // A degenerate corpus (every vector exactly on a centroid) stamps
@@ -614,8 +610,8 @@ object AnnIndex {
       emb: DataFrame, nCells: Option[Int] = None): Unit = {
     nCells.foreach(n => require(n > 0, s"nCells must be positive, got $n"))
     val (_, m, ksub, residual) = geometry(spark, name)
-    val cur = props(spark, cellsTable(spark, name)).getOrElse(NCellsProp,
-      sys.error(s"$name cells table has no $NCellsProp property")).toInt
+    val ct = cellsTable(spark, name)
+    val cur = stamp(props(spark, ct), ct, NCellsProp).toInt
     val scope = scopeOf(spark, name)
     // writeAnnIndex IS an atomic rebuild under Generations: it writes
     // the next generation while the current one keeps serving probes

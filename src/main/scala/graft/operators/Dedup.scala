@@ -863,16 +863,14 @@ object Dedup {
     * with — see [[writeNearDupIndex]]. */
   val ShingleKProp = "graft.shingle.k"
 
-  /** The `k` stamped on index table `t`, or an error naming the fix if
-    * the table predates the stamp (rebuild via [[writeNearDupIndex]]). */
+  /** The `k` stamped on index table `t`, or an error if it has none. */
   private def storedShingleK(spark: SparkSession, t: String): Int =
     spark.sessionState.catalog
       .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(t))
       .properties.get(ShingleKProp)
       .map(_.toInt)
       .getOrElse(sys.error(s"$t has no $ShingleKProp property — not a " +
-        "graft near-dup index (or built before k-stamping); rebuild it " +
-        "with writeNearDupIndex"))
+        "graft near-dup index"))
 
   /** Fail fast when a caller's `k` disagrees with the one the index
     * was built with: the mismatch is otherwise SILENT — band hashes
@@ -933,9 +931,6 @@ object Dedup {
       ifAbsent: Boolean = false): Unit = {
     val spark = batch.sparkSession
     val catalog = spark.sessionState.catalog
-    def spec(t: String) = catalog
-      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(t))
-      .bucketSpec.getOrElse(sys.error(s"$t is not a bucketed index table"))
     val lease = Generations.begin(spark, name, IndexMembers)
     try {
       requireShingleK(spark, name, k)
@@ -957,21 +952,18 @@ object Dedup {
           spark.table(bt).select("doc_id").distinct(),
           Seq("doc_id"), "left_anti")
         else bands
-      // appends FOLLOW the catalog's bucket/sort spec (legacy
-      // (band,bh)-bucketed indexes keep their layout until the next
-      // compaction upgrades them to the canonical single-column one)
-      def appendWith(df: DataFrame, t: String): Unit = {
-        val sp = spec(t)
-        val bc = sp.bucketColumnNames
-        val w = df.write.format("parquet").mode("append")
-          .bucketBy(sp.numBuckets, bc.head, bc.tail: _*)
-        (sp.sortColumnNames match {
-          case Nil => w
-          case s => w.sortBy(s.head, s.tail: _*)
-        }).saveAsTable(t)
+      // appends reuse the catalog's bucket count on the canonical
+      // single-column layout (see writeNearDupIndex)
+      def appendWith(df: DataFrame, t: String, bcol: String): Unit = {
+        val nb = catalog.getTableMetadata(
+            spark.sessionState.sqlParser.parseTableIdentifier(t))
+          .bucketSpec.getOrElse(sys.error(s"$t is not a bucketed index table"))
+          .numBuckets
+        df.write.format("parquet").mode("append")
+          .bucketBy(nb, bcol).sortBy(bcol).saveAsTable(t)
       }
-      appendWith(bandsToAdd, bt)
-      appendWith(bs.select(col("doc_id"), col("shs")), st)
+      appendWith(bandsToAdd, bt, "bh")
+      appendWith(bs.select(col("doc_id"), col("shs")), st, "doc_id")
       // make the append visible to THIS session's next probe even if
       // the insert path left a cached file listing behind (other
       // sessions must refresh on their side — caches are per-session)
@@ -1070,26 +1062,21 @@ object Dedup {
         val k = meta.properties.getOrElse(ShingleKProp,
           sys.error(s"$t has no $ShingleKProp property"))
         // the CANONICAL layout (see writeNearDupIndex): single bucket
-        // column + sort — a legacy (band,bh)-bucketed generation
-        // upgrades here, compaction being the rewrite that touches
-        // every row anyway
+        // column + sort
         val bcol = if (member == "buckets") "bh" else "doc_id"
         val nb = numBuckets.getOrElse(spec.numBuckets)
         require(nb > 0, s"numBuckets must be positive, got $nb")
         val nt = Generations.physical(name, member, lease.gen)
         val src = tombs.fold(spark.table(t))(tt =>
           spark.table(t).join(tt, Seq("doc_id"), "left_anti"))
-        // same count + already-canonical columns: the forced-bucketed
-        // scan owns one bucket per task — a narrow per-bucket file
-        // merge, no exchange. A RESIZE (or a legacy-layout upgrade)
+        // same count: the forced-bucketed scan owns one bucket per
+        // task — a narrow per-bucket file merge, no exchange. A RESIZE
         // can't reuse the old partitioning: one explicit hash exchange
         // to the new layout (task count pinned — the AQE serial-writer
         // trap), then the bucketed write lands one sorted file set per
         // bucket.
         val shaped =
-          if (nb == spec.numBuckets &&
-              spec.bucketColumnNames == Seq(bcol)) src
-          else src.repartition(nb, col(bcol))
+          if (nb == spec.numBuckets) src else src.repartition(nb, col(bcol))
         shaped.write.format("parquet")
           .bucketBy(nb, bcol).sortBy(bcol)
           .saveAsTable(nt)

@@ -96,7 +96,7 @@ object Frontier {
     * `outputOrdering` from the physical plan into the LogicalRDD, but
     * under AQE the plan is an AdaptiveSparkPlanExec, which reports
     * UnknownPartitioning — measured on this Spark build
-    * (tools.PinPartitioningProbe): a pin under AQE re-exchanges every
+    * (OPTIMIZATION_r19.md): a pin under AQE re-exchanges every
     * downstream consumer; the same pin with adaptive planning scoped
     * OFF for the materializing action carries HashPartitioning +
     * ordering and downstream plans show zero Exchange/Sort. Only the

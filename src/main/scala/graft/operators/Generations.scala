@@ -71,11 +71,35 @@ import org.apache.spark.sql.catalyst.TableIdentifier
   * default — exactly one live generation, today's storage footprint;
   * `gcKeep ≥ 2` gives long-pause readers a full swap cycle of grace,
   * the standard snapshot-isolation widening.
+  *
+  * ==On-disk layout==
+  *
+  * Every [[commit]] stamps `graft.format = `[[Format]] in the same
+  * catalog call as the pointer flip, and [[currentGen]] — the lookup
+  * every probe, append and compaction resolves through — rejects a
+  * family whose pointer carries a missing or different stamp, with an
+  * error that says to rebuild it. The stamp names the whole layout of
+  * every family at once: member set, schemas, bucket specs and
+  * manifest properties. There are no per-family compatibility
+  * branches; a layout is either the current one or refused (the
+  * version-header discipline of Structured Streaming's offset and
+  * commit logs). Bump [[Format]] in the change that alters any
+  * family's persisted layout in a way the current readers or
+  * appenders cannot consume; additive properties that read as absent
+  * on older generations do not need a bump. [[begin]] reads the
+  * pointer unchecked, so a builder's swap (`write…`) over a refused
+  * family is the upgrade path; a family without a builder (a
+  * tombstone set, a registry, budget state) is destroyed and
+  * rewritten.
   */
 object Generations {
 
   /** The pointer property on the manifest table. */
   val GenProp = "graft.gen"
+
+  /** The on-disk layout stamp (see "On-disk layout" above). */
+  val FormatProp = "graft.format"
+  val Format = "1"
 
   /** Writer-lease token property (empty = unheld). */
   val WriterProp = "graft.gen.writer"
@@ -157,12 +181,18 @@ object Generations {
   private def parse(spark: SparkSession, t: String): TableIdentifier =
     spark.sessionState.sqlParser.parseTableIdentifier(t)
 
-  /** Current generation of `name`, or None when no index exists. */
+  /** Current generation of `name`, or None when no index exists.
+    * Throws when the family's layout stamp is not [[Format]]. */
   def currentGen(spark: SparkSession, name: String): Option[Long] = {
-    val c = spark.sessionState.catalog
-    val mt = parse(spark, manifest(name))
-    if (!c.tableExists(mt)) None
-    else c.getTableMetadata(mt).properties.get(GenProp).map(_.toLong)
+    val props = manifestProps(spark, name)
+    val gen = props.get(GenProp).map(_.toLong)
+    val format = props.get(FormatProp)
+    if (gen.isDefined && !format.contains(Format))
+      throw new IllegalStateException(s"index family '$name' has on-disk " +
+        s"layout ${format.fold("(unstamped)")(f => s"$FormatProp = $f")}; " +
+        s"this engine reads $FormatProp = $Format only — rebuild it with " +
+        "its write… builder")
+    gen
   }
 
   /** Resolve a logical member to its current physical table — the ONE
@@ -305,9 +335,9 @@ object Generations {
           else s"foreign writer expired at epoch-ms $exp"}" +
         s"${since.fold("")(t => s", held since epoch-ms $t")})")
     }
-    val cur = currentGen(spark, name)
-    val keep = manifestProps(spark, name).get(KeepProp)
-      .flatMap(_.toIntOption).getOrElse(1)
+    // unchecked: a builder's swap over a refused layout is the upgrade
+    val cur = props.get(GenProp).map(_.toLong)
+    val keep = props.get(KeepProp).flatMap(_.toIntOption).getOrElse(1)
     gcExcept(spark, name, members, keepSet(cur, keep))
     sweepStrayDirs(spark, name, members)
     val token = java.util.UUID.randomUUID().toString
@@ -355,7 +385,7 @@ object Generations {
           s"family '$name' was ${holder.fold("released")(t => s"stolen by $t")}" +
           " — this writer held it past its TTL; its generation is debris")
       setProps(spark, manifest(name), props ++ Map(
-        GenProp -> lease.gen.toString,
+        GenProp -> lease.gen.toString, FormatProp -> Format,
         KeepProp -> gcKeep.toString,
         WriterProp -> "", WriterExpProp -> "0"))
       crashPoint("after-flip")

@@ -81,29 +81,16 @@ object IndexMaintenance {
   /** Metadata-only health probe of `family` with `members` (the same
     * member list its writers pass to [[Generations]]). File counts and
     * bytes come from one filesystem listing per member; pending and
-    * erased counts from the stamped manifest properties (a data count
-    * only on pre-stamp families); the lease from the manifest. Members
-    * whose table does not exist in the current generation (a legacy
-    * family predating the member) are OMITTED from the report — the
-    * probes' silent-downgrade posture, so an automated sweep can still
-    * reach the compaction that upgrades the family. */
+    * erased counts from the stamped manifest properties; the lease
+    * from the manifest. */
   def health(spark: SparkSession, family: String,
       members: Seq[String]): FamilyHealth = {
     val gen = Generations.currentGen(spark, family).getOrElse(
       sys.error(s"no such index family: $family"))
     val catalog = spark.sessionState.catalog
-    val mh = members.flatMap { m =>
+    val mh = members.map { m =>
       val t = Generations.physical(family, m, gen)
       val ident = spark.sessionState.sqlParser.parseTableIdentifier(t)
-      // a member absent from THIS generation is a legacy family built
-      // before the member existed (e.g. pre-r17 lex families without
-      // `impacts`): probes silently downgrade on those, and the sweep
-      // must too — report it absent instead of throwing, so the very
-      // compaction that upgrades the family in place stays reachable
-      // (r17 advice). The next compaction writes the member and it
-      // appears in the health report from then on.
-      if (!catalog.tableExists(ident)) None
-      else Some {
       val meta = catalog.getTableMetadata(ident)
       val loc = new Path(meta.location)
       val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -123,7 +110,6 @@ object IndexMaintenance {
       }
       MemberHealth(m, files, bytes, meta.bucketSpec.map(_.numBuckets),
         leaves = math.max(1L, leafDirs.size.toLong))
-      }
     }
     FamilyHealth(family, gen, mh,
       pendingTombstones = Tombstones.pendingCount(spark, family),

@@ -111,15 +111,12 @@ object KnnGraphIndex {
     (p(KProp), p(NProbeProp), p(DimProp), p(BufProp))
   }
 
-  /** The table's bucket count, or None for a graph family written
-    * before the bucketed layout (pre-r11) — appends then land plain
-    * files (correct, just unpruned) and the next compaction/retrain
-    * UPGRADES the family to the bucketed layout. */
-  private def bucketCountOf(spark: SparkSession,
-      table: String): Option[Int] =
+  /** The table's bucket count — every graph member is bucketed. */
+  private def bucketCountOf(spark: SparkSession, table: String): Int =
     spark.sessionState.catalog.getTableMetadata(
         spark.sessionState.sqlParser.parseTableIdentifier(table))
-      .bucketSpec.map(_.numBuckets)
+      .bucketSpec.getOrElse(sys.error(s"$table is not a bucketed index table"))
+      .numBuckets
 
   /** Exact chain-cosine edges for a (qid, vec_id) pair set, capped at
     * `cap` per qid — [[Similarity.exactReRank]] over a universe
@@ -145,7 +142,7 @@ object KnnGraphIndex {
     * convention), a cluster deployment sizes it to the corpus. */
   def writeKnnGraph(emb: DataFrame, name: String, k: Int = 10,
       nCells: Int = 16, nprobe: Int = 2, edgeBuffer: Int = 0,
-      numBuckets: Int = 8, tm: StageTimer = NoTimer): Unit = {
+      numBuckets: Int = 8): Unit = {
     require(k > 0, s"k must be positive, got $k")
     require(nCells > 0, s"nCells must be positive, got $nCells")
     require(nprobe > 0, s"nprobe must be positive, got $nprobe")
@@ -161,17 +158,17 @@ object KnnGraphIndex {
     val first = emb.select(size(col("embedding"))).take(1)
     require(first.nonEmpty, "cannot build a graph over an empty corpus")
     val dim = first(0).getInt(0)
-    val trained = tm("trainCentroids")(Similarity.trainCentroids(emb, nCells))
+    val trained = Similarity.trainCentroids(emb, nCells)
     require(trained.nonEmpty, "centroid training produced no cells")
     val cents = spark.sparkContext.broadcast(trained)
     val cellOf = udf((v: Seq[Float]) =>
       Similarity.nearestCell(v.toArray, cents.value))
     val probesOf = udf((v: Seq[Float]) =>
       Similarity.nearestCells(v.toArray, cents.value, nprobe))
-    val vecs = tm("vecs pin")(Frontier.pin(emb.select(col("vec_id"),
-      col("embedding"), cellOf(col("embedding")).as("cell"))))
-    val probes = tm("probes pin")(Frontier.pin(emb.select(col("vec_id"),
-      explode(probesOf(col("embedding"))).as("cell"))))
+    val vecs = Frontier.pin(emb.select(col("vec_id"),
+      col("embedding"), cellOf(col("embedding")).as("cell")))
+    val probes = Frontier.pin(emb.select(col("vec_id"),
+      explode(probesOf(col("embedding"))).as("cell")))
     // the ONE corpus-corpus shuffle in the engine (work ≈
     // nprobe·n²/nCells with nCells ∝ n), via the ONE-PASS candidate
     // generator: cosine is scored inside the cell join and only the
@@ -199,22 +196,22 @@ object KnnGraphIndex {
       // bucketed write then lands exactly ONE sorted file per bucket
       // (tightest row-group pruning), and AQE cannot coalesce the
       // upstream exchange into a single serial writer task — the same
-      // trap ShardProfile caught on the shard writer, measured here as
+      // trap SCALE.md's round-11 shard-write profile caught, measured as
       // a 107 s edges write at M=30 (vs ~7 s pinned)
-      () => tm("vecs write")(vecs.repartition(numBuckets, col("vec_id"))
+      () => vecs.repartition(numBuckets, col("vec_id"))
         .write.format("parquet")
         .bucketBy(numBuckets, "vec_id").sortBy("vec_id")
-        .saveAsTable(Generations.physical(name, "vecs", lease.gen))),
-      () => tm("probes write")(probes.repartition(numBuckets, col("vec_id"))
+        .saveAsTable(Generations.physical(name, "vecs", lease.gen)),
+      () => probes.repartition(numBuckets, col("vec_id"))
         .write.format("parquet")
         .bucketBy(numBuckets, "vec_id").sortBy("vec_id")
-        .saveAsTable(Generations.physical(name, "probes", lease.gen))),
-      () => tm("edges write")(edges.repartition(numBuckets, col("qid"))
+        .saveAsTable(Generations.physical(name, "probes", lease.gen)),
+      () => edges.repartition(numBuckets, col("qid"))
         .write.format("parquet")
         .bucketBy(numBuckets, "qid").sortBy("qid")
-        .saveAsTable(Generations.physical(name, "edges", lease.gen))),
-      () => baseDist = tm("baseDist")(AnnIndex.meanCentroidDist(
-        emb.select(col("vec_id"), col("embedding")), cents))))
+        .saveAsTable(Generations.physical(name, "edges", lease.gen)),
+      () => baseDist = AnnIndex.meanCentroidDist(
+        emb.select(col("vec_id"), col("embedding")), cents)))
     Map(
       KProp -> k.toString, NProbeProp -> nprobe.toString,
       DimProp -> dim.toString, BufProp -> edgeBuffer.toString,
@@ -237,7 +234,7 @@ object KnnGraphIndex {
       emb: DataFrame): Double = {
     val base = Generations.manifestProp(spark, name, BaseDistProp)
       .flatMap(_.toDoubleOption)
-      .getOrElse(sys.error(s"graph $name predates $BaseDistProp"))
+      .getOrElse(sys.error(s"graph index $name missing $BaseDistProp"))
     val cents = spark.sparkContext.broadcast(loadCentroids(spark, name))
     if (!(base > 0.0)) Double.PositiveInfinity
     else AnnIndex.meanCentroidDist(
@@ -259,7 +256,7 @@ object KnnGraphIndex {
     else {
       val (k, nprobe, _, buf) = geometry(spark, name)
       val nCells = loadCentroids(spark, name).length
-      val nb = bucketCountOf(spark, t(spark, name, "edges")).getOrElse(8)
+      val nb = bucketCountOf(spark, t(spark, name, "edges"))
       writeKnnGraph(emb, name, k, nCells, nprobe, buf, nb)
       true
     }
@@ -323,27 +320,15 @@ object KnnGraphIndex {
     fresh.join(landed, fenceKeys, "left_anti")
   }
 
-  /** A labelled stage timer for dev profiling — [[appendStages]] runs
-    * through it so GraphProfile times the PRODUCTION dataflow instead
-    * of a re-implementation that silently drifts. */
-  private[operators] trait StageTimer {
-    def apply[A](label: String)(f: => A): A
-  }
-  private[operators] object NoTimer extends StageTimer {
-    def apply[A](label: String)(f: => A): A = f
-  }
-
   /** The append's pinned dataflow frontiers, in production order. */
   private[operators] final case class GraphAppendStages(
     toAdd: DataFrame, newVecs: DataFrame, newProbes: DataFrame,
     pairs: DataFrame, newEdges: DataFrame)
 
-  /** Compute phase of [[appendToKnnGraph]] — shared verbatim with the
-    * GraphProfile dev tool. Returns None when the (fenced) batch is
-    * empty. Caller holds the family's writer lease. */
+  /** Compute phase of [[appendToKnnGraph]]. Returns None when the
+    * (fenced) batch is empty. Caller holds the family's writer lease. */
   private[operators] def appendStages(spark: SparkSession, name: String,
-      batch: DataFrame, ifAbsent: Boolean,
-      tm: StageTimer = NoTimer): Option[GraphAppendStages] = {
+      batch: DataFrame, ifAbsent: Boolean): Option[GraphAppendStages] = {
     val (k, nprobe, dim, buf) = geometry(spark, name)
     val vt = t(spark, name, "vecs")
     // replay fence, batch side: vec_ids already in the applied marker
@@ -355,14 +340,13 @@ object KnnGraphIndex {
     // re-admit them — barred by the pending set or the durable erased
     // registry (the LexIndex replay-resurrection fix, r13 advice,
     // applied uniformly to every ifAbsent append)
-    val toAdd = tm("fence:batch+pin")(Frontier.pin(
+    val toAdd = Frontier.pin(
       if (ifAbsent) Tombstones.barReplayed(
         fenced(batch, spark.table(vt), "vec_id", Seq("vec_id")),
         name, "vec_id")
-      else batch))
-    if (tm("emptyCheck")(toAdd.isEmpty)) return None
-    val cents = tm("loadCentroids")(
-      spark.sparkContext.broadcast(loadCentroids(spark, name)))
+      else batch)
+    if (toAdd.isEmpty) return None
+    val cents = spark.sparkContext.broadcast(loadCentroids(spark, name))
     val cellOf = udf((v: Seq[Float]) =>
       Similarity.nearestCell(v.toArray, cents.value))
     val probesOf = udf((v: Seq[Float]) =>
@@ -372,10 +356,10 @@ object KnnGraphIndex {
     var newVecs: DataFrame = null
     var newProbes: DataFrame = null
     Par.run(spark, Seq(
-      () => newVecs = tm("newVecs pin")(Frontier.pin(toAdd.select(
-        col("vec_id"), col("embedding"), cellOf(col("embedding")).as("cell")))),
-      () => newProbes = tm("newProbes pin")(Frontier.pin(toAdd.select(
-        col("vec_id"), explode(probesOf(col("embedding"))).as("cell"))))))
+      () => newVecs = Frontier.pin(toAdd.select(
+        col("vec_id"), col("embedding"), cellOf(col("embedding")).as("cell"))),
+      () => newProbes = Frontier.pin(toAdd.select(
+        col("vec_id"), explode(probesOf(col("embedding"))).as("cell")))))
     val oldVecs = spark.table(vt)
     // r19 (guide §3.2 "reduce the big side before shuffling it" — here,
     // before the exact re-rank's joins): candidates are SCORED with the
@@ -417,14 +401,14 @@ object KnnGraphIndex {
       .withColumn("cos", expr("cosine_sim(qe, e)"))
     // forward qids (batch) and reverse qids (stored) are disjoint, so
     // one per-qid pool cut over the union prunes both directions
-    val pairs = tm("pairs pin")(Frontier.pin(
+    val pairs = Frontier.pin(
       Similarity.topKPerQuery(
         fwd.select("qid", "vec_id", "cos")
           .unionByName(rev.select("qid", "vec_id", "cos"))
           .filter(col("qid") =!= col("vec_id"))
           .distinct(),
         k + buf + SelectBuffer)
-        .select("qid", "vec_id")))
+        .select("qid", "vec_id"))
     // the exact re-rank only needs embeddings of endpoints the pair
     // set actually touches — scope the corpus side down to them
     // (broadcast semi-join), so the re-rank joins are batch-sized on
@@ -433,12 +417,11 @@ object KnnGraphIndex {
       .unionByName(pairs.select("vec_id")).distinct())
     // pinned: the re-rank joins the universe once per endpoint side —
     // without the pin each side would re-scan the corpus parquet
-    val universe = tm("universe pin")(Frontier.pin(
+    val universe = Frontier.pin(
       oldVecs.select(col("vec_id"), col("embedding"))
         .unionByName(toAdd.select(col("vec_id"), col("embedding")))
-        .join(touched, Seq("vec_id"), "left_semi")))
-    val newEdges = tm("exactReRank pin")(Frontier.pin(
-      exactEdges(universe, pairs, dim, k + buf)))
+        .join(touched, Seq("vec_id"), "left_semi"))
+    val newEdges = Frontier.pin(exactEdges(universe, pairs, dim, k + buf))
     Some(GraphAppendStages(toAdd, newVecs, newProbes, pairs, newEdges))
   }
 
@@ -450,17 +433,13 @@ object KnnGraphIndex {
     * bucket/sort spec from the catalog, landing bucket-aligned sorted
     * files next to the existing ones (the d13 discipline). */
   private[operators] def applyAppend(spark: SparkSession, name: String,
-      st: GraphAppendStages, tm: StageTimer = NoTimer): Unit = {
+      st: GraphAppendStages): Unit = {
     val vt = t(spark, name, "vecs")
     val pt = t(spark, name, "probes")
     val et = t(spark, name, "edges")
-    // appends reuse each table's bucket/sort spec when one exists;
-    // a pre-bucketed-layout (legacy) family appends plain files —
-    // correct rows, pruning restored by the next compaction's upgrade
     def appendTo(df: DataFrame, table: String, key: String): Unit = {
-      val w = df.write.format("parquet").mode("append")
-      bucketCountOf(spark, table)
-        .fold(w)(nb => w.bucketBy(nb, key).sortBy(key))
+      df.write.format("parquet").mode("append")
+        .bucketBy(bucketCountOf(spark, table), key).sortBy(key)
         .saveAsTable(table)
       spark.catalog.refreshTable(table)
     }
@@ -468,13 +447,13 @@ object KnnGraphIndex {
     // anti-join their own targets) and overlap (guide §2.6 / Par doc);
     // the vecs applied-marker MUST still land strictly last
     Par.run(spark, Seq(
-      () => tm("edges append")(appendTo(
+      () => appendTo(
         fenced(st.newEdges, spark.table(et), "qid", Seq("qid", "vec_id")),
-        et, "qid")),
-      () => tm("probes append")(appendTo(
+        et, "qid"),
+      () => appendTo(
         fenced(st.newProbes, spark.table(pt), "vec_id", Seq("vec_id")),
-        pt, "vec_id"))))
-    tm("vecs append")(appendTo(st.newVecs, vt, "vec_id"))
+        pt, "vec_id")))
+    appendTo(st.newVecs, vt, "vec_id")
   }
 
   /** Append a batch of new vectors: the batch gains forward edges
@@ -513,11 +492,8 @@ object KnnGraphIndex {
     numBuckets.foreach(n =>
       require(n > 0, s"numBuckets must be positive, got $n"))
     Tombstones.requireErasurePurges(spark, name, gcKeep)
-    // resolved BEFORE the lease: a legacy (pre-bucketed) family reads
-    // None and the compaction upgrades it to the default layout
     val (k, nprobe, dim, buf) = geometry(spark, name)
-    val nb = numBuckets.getOrElse(
-      bucketCountOf(spark, t(spark, name, "edges")).getOrElse(8))
+    val nb = numBuckets.getOrElse(bucketCountOf(spark, t(spark, name, "edges")))
     // pinned up front; the post-flip clear subtracts exactly this set
     val applied0 = graphTombstones(spark, name)
       .map(tt => Frontier.pin(tt.select(col("vec_id")).distinct()))
@@ -559,10 +535,11 @@ object KnnGraphIndex {
     // carry the drift baseline across the swap — the quantizer is
     // unchanged, so the stamped baseline must survive compaction
     val baseDist = Generations.manifestProp(spark, name, BaseDistProp)
+      .getOrElse(sys.error(s"graph index $name missing $BaseDistProp"))
     Map(
       KProp -> k.toString, NProbeProp -> nprobe.toString,
-      DimProp -> dim.toString, BufProp -> buf.toString) ++
-      baseDist.map(BaseDistProp -> _)
+      DimProp -> dim.toString, BufProp -> buf.toString,
+      BaseDistProp -> baseDist)
     }
     applied0.foreach(Tombstones.clearApplied(spark, name, _))
   }

@@ -170,9 +170,9 @@ object LexIndex {
 
   /** Diagnostics from the last positional probe's anchor pushdown on
     * this JVM: (anchor terms, doc ids pushed) — None when the pushdown
-    * did not run (below the floor, legacy family, budget trip, conf
-    * off). Observability for specs/ladders; the bytes win is measured
-    * by tools/PhraseCost. */
+    * did not run (below the floor, budget trip, conf off).
+    * Observability for specs/ladders; the bytes win is measured in
+    * SCALE.md (round-18 anchor doc pushdown bytes A/B). */
   @volatile private[graft] var lastAnchorStats: Option[(Int, Int)] = None
 
   /** ANCHOR doc-set pushdown for the positional probes (the r17 ask:
@@ -214,7 +214,6 @@ object LexIndex {
       clauseSets: Seq[(String, String, String)]): Option[Seq[Long]] = {
     val max = anchorDocsMax(spark)
     if (max <= 0 || clauseSets.isEmpty) return None
-    if (!hasDictionary(spark, name, asOf)) return None
     val toks = clauseSets.map(_._3).distinct
     val dfMap = vocabFrame(spark, name, asOf,
         Some(col("tok").isin(toks.map(x => x: Any): _*)))
@@ -352,46 +351,6 @@ object LexIndex {
     asOf.fold(Generations.resolve(spark, name, m))(g =>
       Generations.resolveAsOf(spark, name, m, g))
 
-  /** Positional-schema guard for indexes built BEFORE postings carried
-    * the `positions` column: an append would write 5 columns into the
-    * 4-column legacy table (failing with a parquet schema error),
-    * [[probePhrase]] would select a missing column, and a compaction
-    * carries the legacy schema forward — so a legacy family is
-    * read-only for scoring probes until an explicit rebuild upgrades
-    * it. This makes the contract LOUD at the two entry points that
-    * need positions, instead of a schema-mismatch stack trace. */
-  private def requirePositional(spark: SparkSession, pt: String): Unit =
-    require(spark.table(pt).columns.contains("positions"),
-      s"postings table $pt predates positional postings (no " +
-        "`positions` column): scoring probes keep working, but appends " +
-        "and phrase probes need the positional schema — rebuild the " +
-        "family with writeLexIndex (compaction deliberately carries " +
-        "the legacy schema forward; only a rebuild upgrades)")
-
-  /** Dictionary-schema guard for families built BEFORE the maintained
-    * term dictionary (no `vocab` member / no impact-bound columns on
-    * dfcap): scoring, phrase, SHOULD and proximity probes keep working
-    * (they never touch the dictionary), but appends and the vocabulary
-    * surfaces (fuzzy / prefix / autocomplete) need it — loud at the
-    * entry points instead of a missing-table stack trace, the
-    * [[requirePositional]] discipline. */
-  private def requireDictionary(spark: SparkSession, name: String,
-      vt: String): Unit =
-    require(spark.sessionState.catalog.tableExists(parse(spark, vt)),
-      s"index family $name predates the maintained term dictionary " +
-        "(no `vocab` member): scoring/phrase probes keep working, but " +
-        "appends and the vocabulary surfaces (fuzzy/prefix/autocomplete) " +
-        "need it — rebuild the family with writeLexIndex")
-
-  /** Whether the family carries the maintained term dictionary — the
-    * bounded scorer's silent downgrade test ([[probeLexIndexMaxScore]]
-    * falls back to the full probe on a legacy family instead of
-    * tripping [[requireDictionary]]'s loud append-path guard). */
-  private def hasDictionary(spark: SparkSession, name: String,
-      asOf: Option[Long]): Boolean =
-    spark.sessionState.catalog.tableExists(
-      parse(spark, member(spark, name, "vocab", asOf)))
-
   private def requireTokenizer(spark: SparkSession,
       tables: Seq[String]): Unit =
     tables.foreach { t =>
@@ -419,7 +378,7 @@ object LexIndex {
     * BM25 serving pays nothing for it, while [[probePhrase]] gets
     * exact phrase retrieval from the same maintained artifact.
     *
-    * WRITE-SIDE COST, measured (tools/PositionsCost, sf0.1 × M=10,
+    * WRITE-SIDE COST, measured (sf0.1 × M=10,
     * quiet box, SCALE.md round-15 table): positions are 1.43× on
     * postings bytes, 1.74× on the isolated tokenize→write core at
     * build scale (≈8% of the full writeLexIndex wall — the other
@@ -558,7 +517,8 @@ object LexIndex {
         // Exchange — one file per bucket falls out of the carried
         // partitioning exactly as it did from the old per-write
         // repartitions, and AQE cannot coalesce an RDD scan into a
-        // serial writer (the ShardProfile trap the repartitions guarded)
+        // serial writer (the trap the repartitions guarded; SCALE.md's
+        // round-11 shard-write profile)
         () => post.write.format("parquet")
           .bucketBy(numBuckets, "tok").sortBy("tok", "doc_id").saveAsTable(pt),
         // len already carries the (doc_id, numBuckets) clustering from
@@ -634,12 +594,9 @@ object LexIndex {
     try {
       val (pt, lt, st) = (member(spark, name, "postings"),
         member(spark, name, "doclen"), member(spark, name, "stats"))
-      val vt = member(spark, name, "vocab")
-      requireDictionary(spark, name, vt)
+      val (vt, it) =
+        (member(spark, name, "vocab"), member(spark, name, "impacts"))
       requireTokenizer(spark, Seq(pt, lt, st, vt))
-      requirePositional(spark, pt)
-      val it = member(spark, name, "impacts")
-      val hasImp = catalog.tableExists(parse(spark, it))
       // ONE fence-probe job instead of three (r19, guide §1.2): which
       // fenced members already carry this batch id — stats (the
       // `applied` flip), vocab, impacts. Each leg's batch_id predicate
@@ -651,8 +608,8 @@ object LexIndex {
         else {
           def leg(t: String, m: String) = spark.table(t)
             .filter(col("batch_id") === batchId).select(lit(m).as("m"))
-          val legs = leg(st, "stats").unionByName(leg(vt, "vocab"))
-          (if (hasImp) legs.unionByName(leg(it, "impacts")) else legs)
+          leg(st, "stats").unionByName(leg(vt, "vocab"))
+            .unionByName(leg(it, "impacts"))
             .distinct().collect().map(_.getString(0)).toSet
         }
       val applied = landedMembers("stats")
@@ -728,11 +685,8 @@ object LexIndex {
         // MISSING its stamp never makes a probe WRONG, only makes the
         // in-flight batch's docs not yet block-skippably retrievable —
         // which is why stamps ride the same batch-id fence as the
-        // dictionary and the replay closes the gap). Families built
-        // before the impacts member exist skip the stamp (no table):
-        // their probes never block-skip until a compaction upgrades
-        // the family, so losslessness holds either way.
-        val impDone = hasImp && landedMembers("impacts")
+        // dictionary and the replay closes the gap).
+        val impDone = landedMembers("impacts")
         // ---- the four member writes, OVERLAPPED (guide §2.6) ---------
         // Safe to run concurrently because replay convergence needs no
         // ORDER between them, only per-member idempotence — each write
@@ -748,7 +702,14 @@ object LexIndex {
         // drive non-prefix subsets too). Mid-crash visibility is the
         // same class as the old prefix windows: the in-flight batch is
         // partially retrievable until the replay, never wrong for docs
-        // the index already owned.
+        // the index already owned — with one transient exception, the
+        // dfcap drift: a crash that lands vocab but not postings leaves
+        // vocab df OVERCOUNTING postings (the old prefix order could
+        // only undercount), so probeLexIndexMaxScore's 90% cap decision
+        // (df from vocab, n_docs from the not-yet-written stats fence)
+        // can drop a near-cap term from scoring, existing docs
+        // included, until the replay lands the batch. Block pruning
+        // itself stays lossless: bound and score share the same df.
         val landSet = failpointLandSet()
         def gated(m: String, th: () => Unit): Option[() => Unit] =
           if (landSet.forall(_.contains(m))) Some(th) else None
@@ -758,7 +719,7 @@ object LexIndex {
           (if (!vocabDone) Seq(gated("vocab", () => appendWith(
             dictRows(post).withColumn("batch_id", lit(batchId)), vt)))
            else Nil) ++
-          (if (hasImp && !impDone) Seq(gated("impacts", () => appendWith(
+          (if (!impDone) Seq(gated("impacts", () => appendWith(
             impactRows(post, impactBlockRows(spark))
               .withColumn("batch_id", lit(batchId)), it)))
            else Nil)).flatten)
@@ -771,8 +732,7 @@ object LexIndex {
             coalesce(col("total_tokens"), lit(0L)).as("total_tokens"))
           .coalesce(1)
           .write.format("parquet").mode("append").saveAsTable(st)
-        (Seq(pt, lt, st, vt) ++ (if (hasImp) Seq(it) else Nil))
-          .foreach(spark.catalog.refreshTable)
+        Seq(pt, lt, st, vt, it).foreach(spark.catalog.refreshTable)
       }
     } finally Generations.abort(spark, lease)
   }
@@ -851,8 +811,6 @@ object LexIndex {
         // the NEW postings/doclen back (compacted, bucketed — the df
         // recount rides the (tok) bucketing exchange-free), so it must
         // wait for wave 1.
-        // (tok, doc_id) sort: compaction also UPGRADES a tok-only
-        // legacy layout to the MaxScore-prunable one (see writeLexIndex)
         val pt = Generations.physical(name, "postings", lease.gen)
         val lt = Generations.physical(name, "doclen", lease.gen)
         val vt = Generations.physical(name, "vocab", lease.gen)
@@ -875,17 +833,11 @@ object LexIndex {
         // df/stats rebuilt EXACTLY from the rows that survived — the
         // moment logical deletions become statistical deletions. The
         // dictionary consolidates with them: dfcap gets the exact
-        // post-purge (df, max_tf, min_len) per term (this is also the
-        // in-place UPGRADE path for families built before the
-        // dictionary existed — the rebuild derives everything from the
-        // compacted postings).
+        // post-purge (df, max_tf, min_len) per term.
         val nb = numBuckets.getOrElse(
           catalog.getTableMetadata(parse(spark, pt)).bucketSpec.get.numBuckets)
         val dt = Generations.physical(name, "dfcap", lease.gen)
-        // block stamps rebuilt exactly from the compacted postings —
-        // this is also the in-place UPGRADE path for families built
-        // before the impacts member (the vocab discipline): from this
-        // compaction on, every row is stamped and probes may block-skip
+        // block stamps rebuilt exactly from the compacted postings
         val it = Generations.physical(name, "impacts", lease.gen)
         val st = Generations.physical(name, "stats", lease.gen)
         Par.run(spark, Seq(
@@ -995,10 +947,10 @@ object LexIndex {
 
   /** Block-skipping diagnostics from the last [[probeLexIndexMaxScore]]
     * call: (seed ranges pushed, essential stamps kept, essential
-    * stamps total) — None when no stamps were used (legacy family,
-    * budget trip, or single-block terms). The DECISION observability
-    * twin of [[lastBoundedStats]]; the bytes win is measured by
-    * tools/BlockCost. */
+    * stamps total) — None when no stamps were used (budget trip, or
+    * single-block terms). The DECISION observability twin of
+    * [[lastBoundedStats]]; the bytes win is measured in SCALE.md
+    * (round-17 block-max candidacy bytes A/B). */
   @volatile private[graft] var lastBlockStats
     : Option[(Int, Int, Int)] = None
 
@@ -1053,10 +1005,8 @@ object LexIndex {
     * BIT-IDENTICAL to probeLexIndex's (the s65 hash row shares s31's
     * oracle family; LexIndexSpec pins equality on a skew fixture).
     * Falls back to [[probeLexIndex]] whenever a budget trips (term
-    * set, candidate set, index below the pushdown floor) or the
-    * family predates the maintained dictionary — lossless either way;
-    * a family without the `impacts` member runs the bounded probe
-    * WITHOUT block skipping (global bounds only).
+    * set, candidate set, index below the pushdown floor) — lossless
+    * either way.
     *
     * Candidacy legs (`candPred` — a DOC-level predicate over the
     * candidate `doc_id` — `candPairs`, `exclPairs`) compose exactly as
@@ -1084,10 +1034,6 @@ object LexIndex {
     val postings0 = spark.table(pt)
     if (scanBytes(postings0) <= pushdownMinBytes(spark))
       return fullProbe()
-    // legacy pre-dictionary family: the loud requireDictionary guard
-    // is for APPENDS — a scoring probe silently downgrades instead
-    // (r16 advice)
-    if (!hasDictionary(spark, name, asOf)) return fullProbe()
     val qt = Frontier.pin(queries.select(
         col(queries.columns.head).cast("long").as("qid"),
         explode(TextFunctions.tokens(col(queries.columns(1)))).as("tok"))
@@ -1182,57 +1128,52 @@ object LexIndex {
     // rest-stamp dominating every dropped block, so hot terms still
     // skip. The UBs ride the SAME engine termWeightSql text as `ub`,
     // evaluated inside the member scan itself (the dictionary's exact
-    // df joined in). Empty map = no skipping (legacy family / global
-    // budget trip) — the probe is lossless either way, stamps only
-    // remove reads.
+    // df joined in). Empty map = no skipping (global budget trip) —
+    // the probe is lossless either way, stamps only remove reads.
     val stamps: Map[String, Seq[(Long, Long, Long, Long)]] = {
       val it = member(spark, name, "impacts", asOf)
-      if (!spark.sessionState.catalog.tableExists(parse(spark, it)))
-        Map.empty
+      val perTerm = impactsPerTermMax(spark)
+      val win = org.apache.spark.sql.expressions.Window
+        .partitionBy("tok")
+        .orderBy(col("w").desc, col("blk"), col("doc_lo"))
+      // pinned: the top-B collect and the rest aggregate must see
+      // ONE evaluation of the ranked frame
+      val ranked = Frontier.pin(spark.table(it)
+        .filter(col("tok").isin(surviving.map(x => x: Any): _*))
+        .join(dfFrame, "tok")
+        .withColumn("tf", col("max_tf"))
+        .withColumn("len", col("min_len"))
+        .withColumn("n_docs", lit(nDocs))
+        .withColumn("total_tokens", lit(totTok))
+        .withColumn("w", expr(HybridRetrieval.termWeightSql))
+        .select(col("tok"), col("blk"), col("doc_lo"), col("doc_hi"),
+          col("n_rows"), col("w"))
+        .withColumn("rnk", row_number().over(win)))
+      def scaled(w: Double) = math.ceil(w * 1e9).toLong + 2L
+      val top = ranked.filter(col("rnk") <= perTerm)
+        .select(col("tok"), col("doc_lo"), col("doc_hi"),
+          col("n_rows"), col("w"))
+        .limit(ImpactsMax + 1).collect()
+        .map(r => (r.getString(0),
+          (r.getLong(1), r.getLong(2), r.getLong(3),
+            scaled(r.getDouble(4)))))
+      if (top.length > ImpactsMax || top.isEmpty) Map.empty
       else {
-        val perTerm = impactsPerTermMax(spark)
-        val win = org.apache.spark.sql.expressions.Window
-          .partitionBy("tok")
-          .orderBy(col("w").desc, col("blk"), col("doc_lo"))
-        // pinned: the top-B collect and the rest aggregate must see
-        // ONE evaluation of the ranked frame
-        val ranked = Frontier.pin(spark.table(it)
-          .filter(col("tok").isin(surviving.map(x => x: Any): _*))
-          .join(dfFrame, "tok")
-          .withColumn("tf", col("max_tf"))
-          .withColumn("len", col("min_len"))
-          .withColumn("n_docs", lit(nDocs))
-          .withColumn("total_tokens", lit(totTok))
-          .withColumn("w", expr(HybridRetrieval.termWeightSql))
-          .select(col("tok"), col("blk"), col("doc_lo"), col("doc_hi"),
-            col("n_rows"), col("w"))
-          .withColumn("rnk", row_number().over(win)))
-        def scaled(w: Double) = math.ceil(w * 1e9).toLong + 2L
-        val top = ranked.filter(col("rnk") <= perTerm)
-          .select(col("tok"), col("doc_lo"), col("doc_hi"),
-            col("n_rows"), col("w"))
-          .limit(ImpactsMax + 1).collect()
+        // the virtual rest-stamp per over-budget term: hull of the
+        // dropped blocks' doc ranges, their summed rows (seed
+        // coverage accounting), and the MAX of their UBs — each
+        // dropped block is dominated, so skipping it through the
+        // virtual stamp is exactly as lossless as through its own
+        val rest = ranked.filter(col("rnk") > perTerm)
+          .groupBy("tok").agg(min(col("doc_lo")).as("lo"),
+            max(col("doc_hi")).as("hi"), sum(col("n_rows")).as("n"),
+            max(col("w")).as("mw"))
+          .collect()
           .map(r => (r.getString(0),
             (r.getLong(1), r.getLong(2), r.getLong(3),
               scaled(r.getDouble(4)))))
-        if (top.length > ImpactsMax || top.isEmpty) Map.empty
-        else {
-          // the virtual rest-stamp per over-budget term: hull of the
-          // dropped blocks' doc ranges, their summed rows (seed
-          // coverage accounting), and the MAX of their UBs — each
-          // dropped block is dominated, so skipping it through the
-          // virtual stamp is exactly as lossless as through its own
-          val rest = ranked.filter(col("rnk") > perTerm)
-            .groupBy("tok").agg(min(col("doc_lo")).as("lo"),
-              max(col("doc_hi")).as("hi"), sum(col("n_rows")).as("n"),
-              max(col("w")).as("mw"))
-            .collect()
-            .map(r => (r.getString(0),
-              (r.getLong(1), r.getLong(2), r.getLong(3),
-                scaled(r.getDouble(4)))))
-          (top.toSeq ++ rest.toSeq)
-            .groupBy(_._1).map { case (t, bs) => t -> bs.map(_._2) }
-        }
+        (top.toSeq ++ rest.toSeq)
+          .groupBy(_._1).map { case (t, bs) => t -> bs.map(_._2) }
       }
     }
     def rangePred(t: String, rs: Seq[(Long, Long)]) =
@@ -1537,7 +1478,6 @@ object LexIndex {
       phrases: DataFrame, asOf: Option[Long] = None): DataFrame = {
     val pt = member(spark, name, "postings", asOf)
     requireTokenizer(spark, Seq(pt))
-    requirePositional(spark, pt)
     val terms0 = phrases.select(col(phrases.columns.head).as("phrase_id"),
       posexplode(TextFunctions.tokens(col(phrases.columns(1))))
         .as(Seq("off", "tok")))
@@ -1597,8 +1537,7 @@ object LexIndex {
     * bit-identical to its unconstrained value (the s39 argument).
     *
     * Containment needs no positions: the scan reads (tok, doc_id) and
-    * the positions column prunes away exactly as in BM25 scoring — so
-    * SHOULD also serves legacy (pre-positional) families. Scale
+    * the positions column prunes away exactly as in BM25 scoring. Scale
     * shape: the terms side is tiny and broadcast; the postings scan
     * is bounded by the SHOULD terms' posting lists (the bounded
     * `tok IN (…)` pushdown); the one shuffle groups (qid, doc_id)
@@ -1809,7 +1748,6 @@ object LexIndex {
       " ordered runs are probePhrase's job)")
     val pt = member(spark, name, "postings", asOf)
     requireTokenizer(spark, Seq(pt))
-    requirePositional(spark, pt)
     val qp0 = pairs.select(col(pairs.columns.head).as("qid"),
       col(pairs.columns(1)).as("tok_a"), col(pairs.columns(2)).as("tok_b"))
     val postings0 = spark.table(pt)
@@ -1888,7 +1826,6 @@ object LexIndex {
     require(slop >= 1, s"slop must be >= 1, got $slop")
     val pt = member(spark, name, "postings", asOf)
     requireTokenizer(spark, Seq(pt))
-    requirePositional(spark, pt)
     val qn0 = clauses.select(col(clauses.columns.head).as("qid"),
       col(clauses.columns(1)).cast("int").as("off"),
       col(clauses.columns(2)).as("tok")).distinct()
@@ -2061,7 +1998,6 @@ object LexIndex {
       tokFilter: Option[Column] = None): DataFrame = {
     val dt = member(spark, name, "dfcap", asOf)
     val vt = member(spark, name, "vocab", asOf)
-    requireDictionary(spark, name, vt)
     requireTokenizer(spark, Seq(dt, vt))
     def scan(t: String) = {
       val s = spark.table(t).select(col("tok"), col("df"),
@@ -2147,7 +2083,6 @@ object LexIndex {
     require(w >= 1, s"window size must be >= 1, got $w")
     val pt = member(spark, name, "postings", asOf)
     requireTokenizer(spark, Seq(pt))
-    requirePositional(spark, pt)
     val h = hits.select(col(hits.columns.head).cast("long").as("qid"),
       col(hits.columns(1)).cast("long").as("doc_id")).distinct()
     val qt0 = queries.select(col(queries.columns.head).as("qid"),

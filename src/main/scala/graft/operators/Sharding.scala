@@ -76,7 +76,7 @@ object Sharding {
     * AQE-coalescible, and at small volumes AQE folds it into ONE task
     * that then opens every shard directory's parquet writer serially —
     * measured 2.0 s vs 0.4 s for the identical write at sf0.1
-    * (ShardProfile). Pinning the count keeps the write parallel at
+    * (SCALE.md, round-11 shard-write profile). Pinning the count keeps the write parallel at
     * every scale; at real volumes the partitions are large and the
     * two forms plan identically. */
   private def writeTasks(spark: org.apache.spark.sql.SparkSession): Int =

@@ -68,48 +68,17 @@ private[graft] object Tombstones {
 
   def family(index: String): String = s"${index}_tombstones"
 
-  /** A pre-r11 deployment's PLAIN `<index>_tombstones` table (the old
-    * overwrite-based store), if one exists and the family does not —
-    * its pending erasures must stay visible across the upgrade, the
-    * same contract [[graft.streaming.StreamingNightlyIngest]]'s
-    * corpusPhysical keeps for the legacy corpus table. */
-  private def legacyTable(spark: SparkSession,
-      index: String): Option[String] = {
-    val fam = family(index)
-    if (spark.sessionState.catalog.tableExists(
-        spark.sessionState.sqlParser.parseTableIdentifier(fam)))
-      Some(fam)
-    else None
-  }
-
   /** The pending-deletion set of `index`, or None when empty/absent.
-    * Catalog-metadata-only when empty — probes pay no extra job. A
-    * legacy plain table (pre-family deployments) reads as the current
-    * set; the next MUTATION migrates it into the family (reads stay
-    * pure — a read-path write would race the index's writer lease). */
-  def get(spark: SparkSession, index: String): Option[DataFrame] = {
-    val fam = family(index)
-    Generations.currentGen(spark, fam) match {
-      case Some(_)
-        if Generations.manifestProp(spark, fam, EmptyProp).contains("true") =>
-        None
-      case Some(_) => Some(spark.table(Generations.resolve(spark, fam, "ids")))
-      case None => legacyTable(spark, index).map(spark.table)
-    }
-  }
+    * Catalog-metadata-only when empty — probes pay no extra job. */
+  def get(spark: SparkSession, index: String): Option[DataFrame] =
+    idsOf(spark, family(index))
 
-  /** A migration crash window's debris: if a previous add/clear died
-    * AFTER its family swap committed but BEFORE it dropped the plain
-    * legacy table, that table is orphaned — the family is the truth
-    * and [[get]] ignores the plain table, but a later [[destroy]]
-    * would resurrect the stale pre-migration set through the legacy
-    * fallback. Every MUTATION retires such debris up front (mirroring
-    * [[graft.streaming.StreamingNightlyIngest]]'s corpusPhysical);
-    * reads stay pure. */
-  private def dropOrphanLegacy(spark: SparkSession, index: String): Unit =
-    if (Generations.currentGen(spark, family(index)).isDefined)
-      legacyTable(spark, index)
-        .foreach(Generations.dropTableAndLocation(spark, _))
+  /** The current `ids` of an ids family, None when empty or absent. */
+  private def idsOf(spark: SparkSession, fam: String): Option[DataFrame] =
+    Generations.currentGen(spark, fam)
+      .filterNot(_ =>
+        Generations.manifestProp(spark, fam, EmptyProp).contains("true"))
+      .map(g => spark.table(Generations.physical(fam, "ids", g)))
 
   /** The merged set's write: one file at takedown sizes, a partitioned
     * multi-task write past [[SingleFileMax]] (see its note). */
@@ -131,7 +100,6 @@ private[graft] object Tombstones {
   def add(spark: SparkSession, index: String, ids: DataFrame,
       idCol: String): Unit = {
     val fam = family(index)
-    dropOrphanLegacy(spark, index)
     Generations.swap(spark, fam, Members) { lease =>
       // merged under the family's writer lease (the clearApplied
       // discipline, applied symmetrically): a clearApplied committing
@@ -141,10 +109,7 @@ private[graft] object Tombstones {
       // about. Under the lease the two mutations serialize cleanly.
       val add = ids.select(col(ids.columns.head).cast("long").as(idCol))
         .distinct()
-      // `get` folds a legacy plain table in as the current set, so the
-      // first post-upgrade mutation MIGRATES it: merged into the new
-      // generation (pin breaks the read-what-we-then-drop dependency;
-      // the plain table is retired after the flip)
+      // pinned: the count and the write share one evaluation
       val merged = Frontier.pin(get(spark, index)
         .fold(add)(cur => cur.unionByName(
           add.select(col(add.columns.head).as(cur.columns.head)))
@@ -153,9 +118,6 @@ private[graft] object Tombstones {
       writeIds(merged, n, Generations.physical(fam, "ids", lease.gen))
       Map(EmptyProp -> (n == 0L).toString, PendingProp -> n.toString)
     }
-    // the swap committed, so the family is the truth: retire a
-    // just-migrated plain legacy table
-    dropOrphanLegacy(spark, index)
   }
 
   /** Remove exactly the ids a compaction/rebuild APPLIED, leaving any
@@ -208,7 +170,6 @@ private[graft] object Tombstones {
     * under-lease subtraction discipline. */
   def clearStale(spark: SparkSession, index: String,
       applied: DataFrame): Unit = {
-    dropOrphanLegacy(spark, index)
     clearRaceHook.foreach(_.apply())
     if (get(spark, index).isDefined) {
       val fam = family(index)
@@ -231,9 +192,6 @@ private[graft] object Tombstones {
         writeIds(remaining, n, Generations.physical(fam, "ids", lease.gen))
         Map(EmptyProp -> (n == 0L).toString, PendingProp -> n.toString)
       }
-      // the swap committed, so the family is now the truth: retire a
-      // just-migrated plain legacy table (same post-flip step as add's)
-      dropOrphanLegacy(spark, index)
     }
   }
 
@@ -245,45 +203,33 @@ private[graft] object Tombstones {
     * The whole set being cleared was applied (that is the contract),
     * so it is recorded in the ERASED registry first — same ordering
     * argument as [[clearApplied]]. */
-  def clear(spark: SparkSession, index: String): Unit = {
-    dropOrphanLegacy(spark, index)
-    get(spark, index).foreach(cur =>
-      registerErased(spark, index, Frontier.pin(cur)))
-    get(spark, index).map(_.columns.head).foreach { idName =>
+  def clear(spark: SparkSession, index: String): Unit =
+    get(spark, index).foreach { cur =>
+      registerErased(spark, index, Frontier.pin(cur))
       val fam = family(index)
-      val legacy = legacyTable(spark, index)
-        .filter(_ => Generations.currentGen(spark, fam).isEmpty)
       Generations.swap(spark, fam, Members) { lease =>
         // empty set keeps the family's id column name (doc_id/vec_id)
-        spark.range(0).select(lit(0L).as(idName)).coalesce(1)
+        spark.range(0).select(lit(0L).as(cur.columns.head)).coalesce(1)
           .write.format("parquet")
           .saveAsTable(Generations.physical(fam, "ids", lease.gen))
         Map(EmptyProp -> "true", PendingProp -> "0")
       }
-      legacy.foreach(Generations.dropTableAndLocation(spark, _))
     }
-  }
 
   /** The erasure-debt gauge: how many ids await physical reclamation.
-    * Catalog-metadata-only once a [[PendingProp]] stamp exists (every
-    * mutation since the stamp writes one); pre-stamp families and
-    * legacy plain tables pay one count. Surfaced so an operator
-    * watching a family ([[Generations.leaseStatus]]) also sees how
-    * much the next compaction owes. */
-  def pendingCount(spark: SparkSession, index: String): Long = {
-    val fam = family(index)
-    Generations.currentGen(spark, fam) match {
-      case Some(_)
-        if Generations.manifestProp(spark, fam, EmptyProp).contains("true") =>
-        0L
-      case Some(_) =>
-        Generations.manifestProp(spark, fam, PendingProp).map(_.toLong)
-          .getOrElse(
-            spark.table(Generations.resolve(spark, fam, "ids")).count())
-      case None =>
-        legacyTable(spark, index).map(spark.table(_).count()).getOrElse(0L)
-    }
-  }
+    * Catalog metadata only — every mutation stamps [[PendingProp]].
+    * Surfaced so an operator watching a family
+    * ([[Generations.leaseStatus]]) also sees how much the next
+    * compaction owes. */
+  def pendingCount(spark: SparkSession, index: String): Long =
+    stampedCount(spark, family(index))
+
+  /** The [[PendingProp]] stamp of an ids family (0 when it was never
+    * written; every write stamps it). */
+  private def stampedCount(spark: SparkSession, fam: String): Long =
+    Generations.currentGen(spark, fam).fold(0L)(_ =>
+      Generations.manifestProp(spark, fam, PendingProp).getOrElse(
+        sys.error(s"ids family '$fam' has no $PendingProp stamp")).toLong)
 
   /** ERASURE OVERRIDES HISTORY — the guard every tombstone-applying
     * compaction calls before a swap that would RETAIN generations
@@ -310,16 +256,12 @@ private[graft] object Tombstones {
     }
 
   /** Remove the family entirely — fixture/test reset, the
-    * [[Generations.destroy]] twin. Any plain legacy table goes too:
-    * leaving it would resurrect the stale pre-migration erasure set
-    * through [[get]]'s legacy fallback. The erased registry goes with
-    * it (destroy is the full-reset path; a production deployment never
+    * [[Generations.destroy]] twin. The erased registry goes with it
+    * (destroy is the full-reset path; a production deployment never
     * destroys — it [[readmit]]s). */
   def destroy(spark: SparkSession, index: String): Unit = {
     Generations.destroy(spark, family(index), Members)
     Generations.destroy(spark, erasedFamily(index), Members)
-    legacyTable(spark, index)
-      .foreach(Generations.dropTableAndLocation(spark, _))
   }
 
   // ------------------------------------------------------------------
@@ -351,16 +293,8 @@ private[graft] object Tombstones {
   /** The registry's contents, or None when empty/absent —
     * catalog-metadata-only when empty ([[EmptyProp]], the [[get]]
     * fast path). */
-  def erasedSet(spark: SparkSession, index: String): Option[DataFrame] = {
-    val fam = erasedFamily(index)
-    Generations.currentGen(spark, fam) match {
-      case Some(_)
-        if Generations.manifestProp(spark, fam, EmptyProp).contains("true") =>
-        None
-      case Some(_) => Some(spark.table(Generations.resolve(spark, fam, "ids")))
-      case None => None
-    }
-  }
+  def erasedSet(spark: SparkSession, index: String): Option[DataFrame] =
+    idsOf(spark, erasedFamily(index))
 
   /** Merge `ids` (first column, cast to long) into the erased
     * registry — a [[Generations]] swap, idempotent (distinct-merged),
@@ -385,19 +319,8 @@ private[graft] object Tombstones {
 
   /** Registry SIZE — [[pendingCount]]'s twin for the erased side,
     * catalog-metadata-only (every registry write stamps the count). */
-  def erasedCount(spark: SparkSession, index: String): Long = {
-    val fam = erasedFamily(index)
-    Generations.currentGen(spark, fam) match {
-      case Some(_)
-        if Generations.manifestProp(spark, fam, EmptyProp).contains("true") =>
-        0L
-      case Some(_) =>
-        Generations.manifestProp(spark, fam, PendingProp).map(_.toLong)
-          .getOrElse(
-            spark.table(Generations.resolve(spark, fam, "ids")).count())
-      case None => 0L
-    }
-  }
+  def erasedCount(spark: SparkSession, index: String): Long =
+    stampedCount(spark, erasedFamily(index))
 
   /** RE-ADMISSION: remove `ids` from the erased registry so a future
     * ingest of those docs lands normally — the explicit operator act

@@ -102,8 +102,7 @@ object CorpusPrep {
     * order, packed by the two-phase scan, doc_id joined back over the
     * 1:1 position — before presentation ordering; feeds p02 and the
     * p04 shard writer. */
-  /** private[graft]: ShardProfile times the REAL p04 upstream. */
-  private[graft] def shuffledPack(s: SparkSession, dir: String): DataFrame = {
+  private def shuffledPack(s: SparkSession, dir: String): DataFrame = {
     val shuffled = Sampling.deterministicShuffle(
       preppedTokens(s, dir), col("doc_id"), salt = "prep2")
     Packing.packPlan(
@@ -651,7 +650,8 @@ object CorpusPrep {
         // pinned: writeShards consumes the assignments twice (empty
         // probe + the write job), and the shuffle/pack windows cannot
         // short-circuit under a limit — without the pin the chain's
-        // window stages run once per consumer (ShardProfile's A/B)
+        // window stages run once per consumer (SCALE.md's round-11
+        // shard-write profile A/B)
         val packed = Frontier.pin(shuffledPack(s, dir)
           .select(col("doc_id"), col("shuffle_pos"), col("n_tokens"),
             col("start_tok")))

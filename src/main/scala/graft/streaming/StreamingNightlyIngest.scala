@@ -144,18 +144,7 @@ object StreamingNightlyIngest extends org.apache.spark.internal.Logging {
     * generation — the same write discipline as the indexes. */
   private val CorpusMembers = Seq("vecs")
 
-  /** Create or replace the raw-vector corpus (a generation swap).
-    * Like every corpus MUTATION, it retires a legacy plain-table
-    * leftover once the swap has committed: the pin materializes the
-    * input before the plain table is touched, so this is safe even
-    * when `vecs` was read FROM that table (the wrap-as-generation-0
-    * migration). Without the retirement, a takedown's
-    * [[compactCorpus]] on a pre-family deployment would swap the
-    * filtered corpus in as the family but leave every deleted doc's
-    * embedding physically on disk in the orphaned plain table —
-    * violating the true-erasure contract for deployments that never
-    * run [[nightStep]] (whose [[corpusPhysical]] is otherwise the
-    * only place the leftover was dropped). */
+  /** Create or replace the raw-vector corpus (a generation swap). */
   def writeCorpus(spark: SparkSession, arts: Artifacts,
       vecs: DataFrame, props: Map[String, String] = Map.empty): Unit = {
     val pinned = Frontier.pin(vecs)
@@ -165,62 +154,13 @@ object StreamingNightlyIngest extends org.apache.spark.internal.Logging {
           Generations.physical(arts.annCorpusTable, "vecs", lease.gen))
       props
     }
-    if (legacyCorpusExists(spark, arts))
-      Generations.dropTableAndLocation(spark, arts.annCorpusTable)
-  }
-
-  private def legacyCorpusExists(spark: SparkSession,
-      arts: Artifacts): Boolean =
-    spark.sessionState.catalog.tableExists(
-      spark.sessionState.sqlParser.parseTableIdentifier(arts.annCorpusTable))
-
-  /** Resolve the corpus family's current physical table for a WRITE
-    * path, MIGRATING a legacy deployment on first mutation: the corpus
-    * used to be a plain table named `annCorpusTable`; it is now a
-    * [[Generations]] family. A pre-existing plain table is wrapped as
-    * the family's first generation (pin → swap → drop the plain
-    * table), so old deployments mutate through the pointer instead of
-    * erroring with "no such index". Crash-safe in both windows: before
-    * the pointer commit the plain table is untouched and the next call
-    * re-migrates; after it the family resolves and the plain leftover
-    * is dropped (re-dropped on the next call if the drop itself was
-    * the casualty).
-    *
-    * WRITE paths only ([[nightStep]]'s append, [[writeCorpus]]): the
-    * migration takes the corpus family's writer lease, and a read that
-    * migrated would both violate the read-purity discipline
-    * [[Tombstones.get]] documents and make two concurrent readers of a
-    * legacy deployment race that lease (the loser throwing instead of
-    * reading). [[corpus]] reads the plain table directly instead. */
-  private def corpusPhysical(spark: SparkSession, arts: Artifacts): String = {
-    val t = arts.annCorpusTable
-    Generations.currentGen(spark, t) match {
-      case Some(_) =>
-        if (legacyCorpusExists(spark, arts))
-          Generations.dropTableAndLocation(spark, t)
-        Generations.resolve(spark, t, "vecs")
-      case None if legacyCorpusExists(spark, arts) =>
-        // writeCorpus pins the plain table's contents, swaps them in
-        // as generation 0, and retires the plain table itself
-        writeCorpus(spark, arts, spark.table(t))
-        Generations.resolve(spark, t, "vecs")
-      case None => Generations.resolve(spark, t, "vecs") // canonical error
-    }
   }
 
   /** The corpus as it currently resolves (still-registered deletions
     * INCLUDED until [[compactCorpus]] — drift/retrain must go through
-    * [[retrainCorpus]] instead). READ-PURE: a legacy plain table is
-    * read in place (no migration, no lease) — the wrap-as-generation-0
-    * upgrade happens on the first MUTATION, as [[Tombstones]] does. */
-  def corpus(spark: SparkSession, arts: Artifacts): DataFrame = {
-    val t = arts.annCorpusTable
-    Generations.currentGen(spark, t) match {
-      case Some(_) => spark.table(Generations.resolve(spark, t, "vecs"))
-      case None if legacyCorpusExists(spark, arts) => spark.table(t)
-      case None => spark.table(Generations.resolve(spark, t, "vecs"))
-    }
-  }
+    * [[retrainCorpus]] instead). */
+  def corpus(spark: SparkSession, arts: Artifacts): DataFrame =
+    spark.table(Generations.resolve(spark, arts.annCorpusTable, "vecs"))
 
   /** The ANN corpus as every drift/retrain consumer must see it:
     * minus the takedown registry. */
@@ -572,7 +512,7 @@ object StreamingNightlyIngest extends org.apache.spark.internal.Logging {
     // replay convergence never depended on inter-family order (every
     // link is idempotent, see the scaladoc above). The takedown stays
     // strictly AFTER the block (ingest-then-delete).
-    val corpusT = corpusPhysical(spark, arts)
+    val corpusT = Generations.resolve(spark, arts.annCorpusTable, "vecs")
     var assignSchema: org.apache.spark.sql.types.StructType = null
     Par.run(spark, Seq(
       () => AnnIndex.appendToAnnIndex(admittedVecs, arts.annIndex,

@@ -94,34 +94,4 @@ class IndexMaintenanceSpec extends SparkSpec {
       s"appends did not move the per-leaf gauge: $cells2 vs $cells")
   }
 
-  test("a legacy family missing a member is reported absent, not a sweep wedge") {
-    import spark.implicits._
-    val name = "graft_t_maint_legacy"
-    LexIndex.destroy(spark, name)
-    LexIndex.writeLexIndex(docs, name, numBuckets = 4)
-    // simulate a pre-r17 family: its current generation has no
-    // `impacts` table (probes silently downgrade on those — the
-    // nightly sweep's health call must not throw before reaching the
-    // very compaction that upgrades the family in place, r17 advice)
-    val gen = Generations.currentGen(spark, name).get
-    spark.sql(s"DROP TABLE ${Generations.physical(name, "impacts", gen)}")
-    val h = IndexMaintenance.health(spark, name, LexMembers)
-    assert(!h.members.exists(_.member == "impacts"),
-      s"dropped member still reported: ${h.members}")
-    assert(h.members.size == LexMembers.size - 1)
-    // the policy still evaluates, and erasure debt still fires — the
-    // compaction path stays reachable for the legacy family
-    LexIndex.tombstoneLex(spark, name, Seq(1L).toDF("doc_id"))
-    val due = IndexMaintenance.compactionDue(
-      IndexMaintenance.health(spark, name, LexMembers))
-    assert(due.due && due.reasons.exists(_.contains("erasure debt")),
-      s"legacy family sweep decision broken: $due")
-    // the gated compaction UPGRADES the family: the member is rebuilt
-    // and reappears in the health report from then on
-    LexIndex.compactLexIndex(spark, name)
-    val h2 = IndexMaintenance.health(spark, name, LexMembers)
-    assert(h2.members.exists(_.member == "impacts"),
-      s"compaction did not restore the member: ${h2.members}")
-    LexIndex.destroy(spark, name)
-  }
 }

@@ -249,51 +249,6 @@ class LexIndexSpec extends SparkSpec {
     LexIndex.destroy(spark, name)
   }
 
-  test("legacy pre-dictionary family: scoring keeps working, vocabulary " +
-      "surfaces and appends fail loudly, compaction upgrades in place") {
-    val name = "graft_t_lexnd"
-    LexIndex.destroy(spark, name)
-    LexIndex.writeLexIndex(docs.filter(col("doc_id") < 60), name,
-      numBuckets = 2)
-    val before = LexIndex.probeLexIndex(spark, name,
-        queries, kEach = 10).collect().map(_.toString).sorted
-    // fabricate a pre-dictionary deployment: drop the vocab member and
-    // rewrite dfcap without the impact-bound columns
-    val vt = Generations.resolve(spark, name, "vocab")
-    Generations.dropTableAndLocation(spark, vt)
-    val dt = Generations.resolve(spark, name, "dfcap")
-    val legacy = Frontier.pin(spark.table(dt).select("tok", "df"))
-    Generations.dropTableAndLocation(spark, dt)
-    legacy.write.format("parquet")
-      .bucketBy(2, "tok").sortBy("tok").saveAsTable(dt)
-    spark.sql(s"ALTER TABLE $dt SET TBLPROPERTIES " +
-      s"('${LexIndex.TokenizerProp}' = '${LexIndex.TokenizerId}')")
-    // the scoring probe reads dfcap's df column only — identical
-    assert(LexIndex.probeLexIndex(spark, name, queries, kEach = 10)
-      .collect().map(_.toString).sorted.sameElements(before),
-      "scoring probe changed on the legacy dictionary schema")
-    // vocabulary surfaces and appends say WHY and name the fix
-    import spark.implicits._
-    val ef = intercept[IllegalArgumentException] {
-      LexIndex.probeFuzzy(spark, name, Seq((0L, "tble")).toDF("qid", "term"))
-        .collect()
-    }
-    assert(ef.getMessage.contains("term dictionary"), ef.getMessage)
-    val ea = intercept[IllegalArgumentException] {
-      LexIndex.appendToLexIndex(batch(4200000000L), name, batchId = "leg")
-    }
-    assert(ea.getMessage.contains("term dictionary"), ea.getMessage)
-    // compaction rebuilds the dictionary from the postings — the
-    // in-place upgrade path — and the surfaces work again
-    LexIndex.compactLexIndex(spark, name)
-    assert(dictConsistent(name), "upgrade compaction: dictionary wrong")
-    assert(LexIndex.probeFuzzy(spark, name,
-      Seq((0L, "tble")).toDF("qid", "term")).count() >= 0)
-    LexIndex.appendToLexIndex(batch(4200000000L), name, batchId = "leg")
-    assert(dictConsistent(name), "post-upgrade append: dictionary wrong")
-    LexIndex.destroy(spark, name)
-  }
-
   test("ifAbsent replay after an erasure compaction cannot resurrect purged docs (r13 advice)") {
     // the resurrection window: a batch lands, a takedown of its docs
     // follows, the nightly callback compacts (purging the docs,
@@ -1134,47 +1089,4 @@ class LexIndexSpec extends SparkSpec {
     assert(e.getMessage.contains("tokenizer"))
   }
 
-  test("legacy positions-less postings: scoring probe keeps working, append and phrase probe fail loudly with rebuild-required") {
-    val name = "graft_t_lexleg"
-    LexIndex.destroy(spark, name)
-    LexIndex.writeLexIndex(docs.filter(col("doc_id") < 60), name,
-      numBuckets = 2)
-    val before = probe(name)
-    // fabricate a pre-positional deployment: rewrite the physical
-    // postings table without the positions column (same bucketing and
-    // tokenizer stamp — exactly what an index built before the schema
-    // change looks like)
-    val pt = Generations.resolve(spark, name, "postings")
-    val legacy = Frontier.pin(spark.table(pt).drop("positions"))
-    Generations.dropTableAndLocation(spark, pt)
-    legacy.write.format("parquet")
-      .bucketBy(2, "tok").sortBy("tok").saveAsTable(pt)
-    spark.sql(s"ALTER TABLE $pt SET TBLPROPERTIES " +
-      s"('${LexIndex.TokenizerProp}' = '${LexIndex.TokenizerId}')")
-    // BM25 scoring never reads positions — identical results on the
-    // legacy schema
-    assert(probe(name).sameElements(before),
-      "scoring probe changed on the legacy postings schema")
-    // appends would write 5 columns into the 4-column table; phrase
-    // probes would select a missing column — both must say WHY and
-    // name the fix instead of a parquet schema stack trace
-    val ea = intercept[IllegalArgumentException] {
-      LexIndex.appendToLexIndex(batch(4100000000L), name, batchId = "leg")
-    }
-    assert(ea.getMessage.contains("positional") &&
-      ea.getMessage.contains("writeLexIndex"), ea.getMessage)
-    import spark.implicits._
-    val ep = intercept[IllegalArgumentException] {
-      LexIndex.probePhrase(spark, name,
-        Seq((1L, "some phrase")).toDF("phrase_id", "phrase"))
-    }
-    assert(ep.getMessage.contains("positional"), ep.getMessage)
-    // the explicit rebuild upgrades; both paths work again
-    LexIndex.writeLexIndex(docs.filter(col("doc_id") < 60), name,
-      numBuckets = 2)
-    LexIndex.appendToLexIndex(batch(4100000000L), name, batchId = "leg")
-    assert(LexIndex.probePhrase(spark, name,
-      Seq((1L, "some phrase")).toDF("phrase_id", "phrase")).count() >= 0)
-    LexIndex.destroy(spark, name)
-  }
 }

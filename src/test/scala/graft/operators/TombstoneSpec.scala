@@ -146,42 +146,6 @@ class TombstoneSpec extends SparkSpec {
       .filter(col("doc_id").isin(1L, 2L, 3L, 4L)).count() == 0L)
   }
 
-  // Upgrade boundary: a pre-r11 deployment's PLAIN <index>_tombstones
-  // table (the old overwrite-based store) holds PENDING erasures. It
-  // must stay visible to every probe across the upgrade and fold into
-  // the crash-atomic family on the first mutation — losing it would
-  // resurrect taken-down ids, the exact failure the family exists to
-  // prevent, shifted to the upgrade boundary.
-  test("a legacy plain tombstones table stays visible and migrates on the first mutation") {
-    import spark.implicits._
-    val docs = Tables(spark, sf, "documents")
-      .select(col("doc_id"), col("text")).filter(col("doc_id") < 60)
-    val name = "graft_tomb_legacy"
-    Dedup.writeNearDupIndex(docs, name, numBuckets = 4)
-    Tombstones.destroy(spark, name)
-    // the pre-family store: a plain parquet table of pending ids
-    Seq(1L, 2L).toDF("doc_id").write.format("parquet")
-      .saveAsTable(s"${name}_tombstones")
-    def set() = Dedup.nearDupTombstones(spark, name)
-      .fold(Set.empty[Long])(_.collect().map(_.getLong(0)).toSet)
-    // visible BEFORE any mutation — probes keep hiding the ids
-    assert(set() == Set(1L, 2L),
-      "legacy pending erasures invisible after upgrade")
-    // the first mutation merges legacy + new into the family and
-    // retires the plain table
-    Dedup.tombstoneNearDup(spark, name, Seq(3L).toDF("doc_id"))
-    assert(set() == Set(1L, 2L, 3L))
-    assert(Generations.currentGen(spark, s"${name}_tombstones").isDefined,
-      "migration did not create the family")
-    assert(!spark.catalog.tableExists(s"${name}_tombstones"),
-      "migration left the legacy plain table behind")
-    // physical reclamation applies the migrated ids too
-    Dedup.compactNearDupIndex(spark, name)
-    assert(Dedup.nearDupTombstones(spark, name).isEmpty)
-    assert(spark.table(Generations.resolve(spark, name, "buckets"))
-      .filter(col("doc_id").isin(1L, 2L, 3L)).count() == 0L)
-  }
-
   // The r11 verdict's finding #2: add/clear wrote the whole merged set
   // through coalesce(1) — a single-task write of an UNBOUNDED artifact
   // (between compactions the pending set only grows). Past
@@ -212,41 +176,6 @@ class TombstoneSpec extends SparkSpec {
     Tombstones.clear(spark, name)
     assert(Tombstones.pendingCount(spark, name) == 0L)
     assert(Tombstones.get(spark, name).isEmpty)
-    Tombstones.destroy(spark, name)
-  }
-
-  // ADVICE r11: a crash after the migration swap committed but before
-  // the plain table dropped used to orphan it forever — and a later
-  // destroy would RESURRECT the stale pre-migration erasure set
-  // through get's legacy fallback. Mutations now retire the orphan up
-  // front, and destroy removes the plain table too.
-  test("an orphaned legacy table can neither shadow nor resurrect the erasure set") {
-    import spark.implicits._
-    val name = "graft_tomb_orphan"
-    Tombstones.destroy(spark, name)
-    dropTestTable(s"${name}_tombstones") // a prior JVM's warehouse dir
-    Tombstones.add(spark, name, Seq(5L).toDF("doc_id"), "doc_id")
-    // simulate the crash window: family live, plain table left behind
-    Seq(1L, 2L).toDF("doc_id").write.format("parquet")
-      .saveAsTable(s"${name}_tombstones")
-    def set() = Tombstones.get(spark, name)
-      .fold(Set.empty[Long])(_.collect().map(_.getLong(0)).toSet)
-    // the family is the truth; the orphan never shadows it
-    assert(set() == Set(5L))
-    // destroy with the orphan still present must not resurrect {1,2}
-    Tombstones.destroy(spark, name)
-    assert(Tombstones.get(spark, name).isEmpty,
-      "destroy resurrected a stale pre-migration erasure set")
-    assert(Tombstones.pendingCount(spark, name) == 0L)
-    // and a mutation retires an orphan it finds (the self-healing path)
-    Tombstones.add(spark, name, Seq(7L).toDF("doc_id"), "doc_id")
-    Seq(1L, 2L).toDF("doc_id").write.format("parquet")
-      .saveAsTable(s"${name}_tombstones")
-    Tombstones.add(spark, name, Seq(8L).toDF("doc_id"), "doc_id")
-    assert(set() == Set(7L, 8L),
-      "a mutation let the orphaned legacy set leak into the merge")
-    assert(!spark.catalog.tableExists(s"${name}_tombstones"),
-      "the mutation did not retire the orphaned legacy table")
     Tombstones.destroy(spark, name)
   }
 

@@ -608,45 +608,6 @@ class StreamingNightlyIngestSpec extends SparkSpec {
     assert(StreamingNightlyIngest.deletedIds(spark, arts).isEmpty)
   }
 
-  test("a legacy plain corpus table migrates into the Generations family on first touch") {
-    val corpus = Tables(spark, sf, "documents")
-      .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
-      .filter(col("doc_id") < 20).localCheckpoint()
-    val arts = mkArts("legacy")
-    reset(arts, corpus)
-    // simulate a pre-family deployment: tear the family down and leave
-    // the corpus as the plain table the old code wrote
-    val vecs = StreamingNightlyIngest.corpus(spark, arts).localCheckpoint()
-    Generations.destroy(spark, arts.annCorpusTable, Seq("vecs"))
-    Generations.dropTableAndLocation(spark, arts.annCorpusTable)
-    vecs.write.format("parquet").saveAsTable(arts.annCorpusTable)
-    val n = vecs.count()
-    // READS ARE PURE: a legacy deployment's corpus resolves in place —
-    // no family is created, no writer lease is raced (two concurrent
-    // readers of a legacy deployment must both just read)
-    assert(StreamingNightlyIngest.corpus(spark, arts).count() == n)
-    assert(StreamingNightlyIngest.retrainCorpus(spark, arts).count() == n)
-    assert(Generations.currentGen(spark, arts.annCorpusTable).isEmpty,
-      "a READ migrated the legacy corpus — reads must stay pure")
-    assert(spark.catalog.tableExists(arts.annCorpusTable),
-      "a READ dropped the legacy plain table")
-    // the first MUTATION migrates: wraps the plain table as generation
-    // 0 and retires it (an empty night still resolves the corpus for
-    // its append, which is the write path)
-    import spark.implicits._
-    val empty = corpus.withColumn("embedding",
-      StreamingNightlyIngest.synthEmbedding).limit(0)
-    StreamingNightlyIngest.nightStep(arts, empty, budget = 1000L,
-      salt = "mig")
-    assert(Generations.currentGen(spark, arts.annCorpusTable).isDefined,
-      "the first mutation did not create the corpus family")
-    assert(!spark.catalog.tableExists(arts.annCorpusTable),
-      "migration left the legacy plain table behind")
-    // and the migrated corpus keeps working as a family
-    assert(StreamingNightlyIngest.corpus(spark, arts).count() == n)
-    assert(StreamingNightlyIngest.retrainCorpus(spark, arts).count() == n)
-  }
-
   test("loop retention: clean compaction nights keep an as-of window; a takedown night purges it") {
     val corpus = Tables(spark, sf, "documents")
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
@@ -694,38 +655,6 @@ class StreamingNightlyIngestSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("takedown-only legacy deployment: compactCorpus completes TRUE erasure") {
-    // a deployment that only ever runs the takedown path
-    // (applyDeletions + compactCorpus, never nightStep) on a
-    // pre-family corpus: the compaction's writeCorpus must retire the
-    // orphaned plain table, or every deleted doc's embedding stays
-    // physically on disk — violating compactCorpus's erasure contract
-    val corpus = Tables(spark, sf, "documents")
-      .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
-      .filter(col("doc_id") < 20).localCheckpoint()
-    val arts = mkArts("legacyerase")
-    reset(arts, corpus)
-    val vecs = StreamingNightlyIngest.corpus(spark, arts).localCheckpoint()
-    Generations.destroy(spark, arts.annCorpusTable, Seq("vecs"))
-    Generations.dropTableAndLocation(spark, arts.annCorpusTable)
-    vecs.write.format("parquet").saveAsTable(arts.annCorpusTable)
-    val n = vecs.count()
-    import spark.implicits._
-    StreamingNightlyIngest.applyDeletions(arts,
-      Seq(3L).toDF("doc_id"), vecs.schema)
-    // logical effect is immediate; physical erasure rides compactCorpus
-    assert(StreamingNightlyIngest.retrainCorpus(spark, arts)
-      .filter(col("vec_id") === 3L).isEmpty)
-    StreamingNightlyIngest.compactCorpus(spark, arts)
-    assert(Generations.currentGen(spark, arts.annCorpusTable).isDefined)
-    assert(!spark.catalog.tableExists(arts.annCorpusTable),
-      "compactCorpus left the deleted embedding physically on disk " +
-        "in the orphaned legacy plain table")
-    assert(StreamingNightlyIngest.corpus(spark, arts).count() == n - 1)
-    assert(StreamingNightlyIngest.corpus(spark, arts)
-      .filter(col("vec_id") === 3L).isEmpty)
-  }
-
   test("a first-ever delete-only night (no shards yet) is a clean no-op, not a crash") {
     val corpus = Tables(spark, sf, "documents")
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
@@ -741,6 +670,16 @@ class StreamingNightlyIngestSpec extends SparkSpec {
       salt = "del", deletes = Some(Seq(7L).toDF("doc_id")))
     assert(StreamingNightlyIngest.deletedIds(spark, arts)
       .collect().map(_.getLong(0)).toSet == Set(7L))
+    // a takedown with no ingest behind it still reaches TRUE erasure:
+    // compactCorpus rewrites the raw-vector corpus without the id
+    val n = StreamingNightlyIngest.corpus(spark, arts).count()
+    assert(!StreamingNightlyIngest.corpus(spark, arts)
+      .filter(col("vec_id") === 7L).isEmpty)
+    StreamingNightlyIngest.compactCorpus(spark, arts)
+    assert(StreamingNightlyIngest.corpus(spark, arts).count() == n - 1)
+    assert(StreamingNightlyIngest.corpus(spark, arts)
+      .filter(col("vec_id") === 7L).isEmpty,
+      "compactCorpus left the deleted embedding physically on disk")
   }
 
   test("replayed nights converge: crashed and re-delivered batches leave every artifact as one clean run") {
