@@ -1033,7 +1033,6 @@ object Dedup {
       gcKeep: Int = 1, numBuckets: Option[Int] = None): Unit = {
     Tombstones.requireErasurePurges(spark, name, gcKeep)
     val catalog = spark.sessionState.catalog
-    val AutoScan = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
     // compaction is where tombstoned deletions become PHYSICAL: the
     // rewrite drops their rows from both tables. Captured PINNED up
     // front: the clear afterwards subtracts exactly this set
@@ -1049,7 +1048,8 @@ object Dedup {
     // leaves a complete index live (the old drop-and-rename had a
     // no-table window between the drop and the rename).
     Generations.swap(spark, name, IndexMembers, gcKeep = gcKeep) { lease =>
-    Par.withConfOverride(spark, AutoScan, "false") {
+      // old-generation members read bucket by bucket
+      val cs = Generations.bucketedReads(spark)
       val tombs = applied0.map(broadcast)
       // member rewrites are independent (disjoint targets, old-gen
       // sources) — overlapped per guide §2.6 (Par doc)
@@ -1067,8 +1067,8 @@ object Dedup {
         val nb = numBuckets.getOrElse(spec.numBuckets)
         require(nb > 0, s"numBuckets must be positive, got $nb")
         val nt = Generations.physical(name, member, lease.gen)
-        val src = tombs.fold(spark.table(t))(tt =>
-          spark.table(t).join(tt, Seq("doc_id"), "left_anti"))
+        val src = tombs.fold(cs.table(t))(tt =>
+          cs.table(t).join(tt, Seq("doc_id"), "left_anti"))
         // same count: the forced-bucketed scan owns one bucket per
         // task — a narrow per-bucket file merge, no exchange. A RESIZE
         // can't reuse the old partitioning: one explicit hash exchange
@@ -1083,7 +1083,6 @@ object Dedup {
         spark.sql(s"ALTER TABLE $nt SET TBLPROPERTIES ('$ShingleKProp' = '$k')")
       })
       Map.empty[String, String]
-    }
     }
     // after the flip the new generation no longer holds the rows, so
     // the APPLIED tombstones are inert — subtract exactly them. A
@@ -1152,7 +1151,7 @@ object Dedup {
     * index and asserts its output row-for-row equal to the plain
     * path's (fixture indexes never cross the 64 MB default, so the
     * d12–d14 hash rows alone would leave the branch unexercised;
-    * Scale100 measures its 10→100× exponent).
+    * SCALE.md's round-12 ladder records its 10→100× exponent).
     *
     * Key collection runs as SEPARATE driver jobs before the probe job.
     * Whenever a pushdown is active, the frames those keys are

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.SparkContext
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, GraftColumnBridge}
 
 /** Frontier pinning: materialize a multi-consumer (or
   * multi-job-consumed) DataFrame once so every consumer reads the same
@@ -73,6 +73,16 @@ object Frontier {
     }
   }
 
+  /** [[pin]], but the pinned frame CARRIES the partitioning and
+    * ordering its materializing job produced, so consumers keyed the
+    * same way (groupBy/window/sort-merge join/bucketed write on the
+    * pinned key) plan WITHOUT a fresh Exchange or Sort (guide §2.4).
+    * The pin runs adaptively under the caller's conf; the layout is
+    * its final adaptive plan's (GraftColumnBridge.withFinalLayout — a
+    * plain checkpoint under AQE reports UnknownPartitioning). */
+  def pinPartitioned[T](ds: Dataset[T]): Dataset[T] =
+    GraftColumnBridge.withFinalLayout(pin(ds), ds)
+
   /** Pin `ds` per the session's durability mode (see object doc).
     *
     * Reliable mode persists the dataset around the `checkpoint()`
@@ -85,28 +95,6 @@ object Frontier {
     * the plan (FrontierSpec counts evaluations through an
     * accumulator); the cache is dropped once the checkpoint files
     * hold the frame. */
-  /** [[pin]], but the materialized frame CARRIES its physical
-    * partitioning and ordering into the logical plan, so downstream
-    * consumers keyed the same way (groupBy/window/sort-merge join/
-    * bucketed write on the pinned key) plan WITHOUT a fresh Exchange
-    * or Sort — the guide §2.4 "two operations keyed the same way share
-    * one exchange" applied across a pin.
-    *
-    * Dataset.localCheckpoint copies `outputPartitioning`/
-    * `outputOrdering` from the physical plan into the LogicalRDD, but
-    * under AQE the plan is an AdaptiveSparkPlanExec, which reports
-    * UnknownPartitioning — measured on this Spark build
-    * (OPTIMIZATION_r19.md): a pin under AQE re-exchanges every
-    * downstream consumer; the same pin with adaptive planning scoped
-    * OFF for the materializing action carries HashPartitioning +
-    * ordering and downstream plans show zero Exchange/Sort. Only the
-    * pin's own job loses adaptivity (irrelevant for the explicit
-    * fixed-N repartitions pinned here — AQE must not rewrite those
-    * anyway); every consumer still plans adaptively. */
-  def pinPartitioned[T](ds: Dataset[T]): Dataset[T] =
-    Par.withConfOverride(ds.sparkSession,
-      "spark.sql.adaptive.enabled", "false") { pin(ds) }
-
   def pin[T](ds: Dataset[T]): Dataset[T] = {
     val spark = ds.sparkSession
     val sc = spark.sparkContext

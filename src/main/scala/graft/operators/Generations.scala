@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 
 /** Crash-atomic, reader-safe swaps for the maintained index families
@@ -415,6 +415,15 @@ object Generations {
       case e: Throwable => abort(spark, lease); throw e
     }
     commit(spark, lease, members, props, gcKeep)
+  }
+
+  /** A clone of `spark` (same runtime confs) with bucketed scans
+    * forced, for compactions that rewrite one bucket per task into one
+    * file per bucket; the caller's shared session is never written. */
+  def bucketedReads(spark: SparkSession): SparkSession = {
+    val cs = GraftColumnBridge.cloneSession(spark)
+    cs.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
+    cs
   }
 
   /** Abandon a swap without flipping: releases the lease (persisted

@@ -568,7 +568,7 @@ object HybridRetrieval {
     * a negative doc_id (DIV truncates toward zero) or a document with
     * more than [[ChunkStride]] chunks (~ window + stride·(S−1) tokens)
     * — FAIL LOUDLY via raise_error instead of aliasing across parents
-    * (r15 advice; Scale100's s60 ladder reuses this at 100×). */
+    * (r15 advice; SCALE.md's round-15 s60 ladder ran this at 100×). */
   def chunkDocs(docs: DataFrame, window: Int, stride: Int,
       offset: Long): DataFrame = {
     require(window >= 1 && stride >= 1 && offset >= 0,

@@ -773,7 +773,6 @@ object LexIndex {
       numBuckets: Option[Int] = None): Unit = {
     Tombstones.requireErasurePurges(spark, name, gcKeep)
     val catalog = spark.sessionState.catalog
-    val AutoScan = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
     // captured PINNED up front: the post-flip clear subtracts exactly
     // this set (Tombstones.clearApplied) — a takedown racing the
     // capture or the flip stays pending for the next pass instead of
@@ -781,89 +780,89 @@ object LexIndex {
     val applied0 = lexTombstones(spark, name)
       .map(t => Frontier.pin(t.select(col("doc_id")).distinct()))
     Generations.swap(spark, name, Members, gcKeep = gcKeep) { lease =>
-      Par.withConfOverride(spark, AutoScan, "false") {
-        val epoch = s"g${lease.gen}"
-        val tombs = applied0.map(broadcast)
-        def purged(t: String): DataFrame =
-          tombs.fold(spark.table(t))(tt =>
-            spark.table(t).join(tt, Seq("doc_id"), "left_anti"))
-        def rewrite(m: String, bcol: String, df: DataFrame,
-            sortCols: Seq[String]): String = {
-          val old = member(spark, name, m)
-          val sp = catalog.getTableMetadata(parse(spark, old)).bucketSpec
-            .getOrElse(sys.error(s"$old is not a bucketed index table"))
-          val nb = numBuckets.getOrElse(sp.numBuckets)
-          require(nb > 0, s"numBuckets must be positive, got $nb")
-          val nt = Generations.physical(name, m, lease.gen)
-          val shaped =
-            if (nb == sp.numBuckets && sp.bucketColumnNames == Seq(bcol)) df
-            else df.repartition(nb, col(bcol))
-          shaped.write.format("parquet")
-            .bucketBy(nb, bcol).sortBy(sortCols.head, sortCols.tail: _*)
-            .saveAsTable(nt)
-          nt
-        }
-        val oldP = member(spark, name, "postings")
-        requireTokenizer(spark, Seq(oldP))
-        // Two waves of independent member writes (guide §2.6 / Par doc):
-        // wave 1 rewrites the row-bearing members from the OLD
-        // generation; wave 2 derives dictionary/stamps/stats by reading
-        // the NEW postings/doclen back (compacted, bucketed — the df
-        // recount rides the (tok) bucketing exchange-free), so it must
-        // wait for wave 1.
-        val pt = Generations.physical(name, "postings", lease.gen)
-        val lt = Generations.physical(name, "doclen", lease.gen)
-        val vt = Generations.physical(name, "vocab", lease.gen)
-        val nbV = numBuckets.getOrElse(
-          catalog.getTableMetadata(parse(spark, oldP)).bucketSpec
-            .getOrElse(sys.error(s"$oldP is not a bucketed index table"))
-            .numBuckets)
-        Par.run(spark, Seq(
-          () => require(rewrite("postings", "tok", purged(oldP),
-            Seq("tok", "doc_id")) == pt),
-          () => require(rewrite("doclen", "doc_id",
-            purged(member(spark, name, "doclen"))
-              .select(col("doc_id"), col("len"), lit(epoch).as("batch_id")),
-            Seq("doc_id")) == lt),
-          // the delta member resets to empty (schema from the old
-          // postings — identical to the compacted table's)
-          () => dictRows(purged(oldP).limit(0)).withColumn("batch_id", lit(""))
-            .coalesce(1).write.format("parquet")
-            .bucketBy(nbV, "tok").sortBy("tok").saveAsTable(vt)))
-        // df/stats rebuilt EXACTLY from the rows that survived — the
-        // moment logical deletions become statistical deletions. The
-        // dictionary consolidates with them: dfcap gets the exact
-        // post-purge (df, max_tf, min_len) per term.
-        val nb = numBuckets.getOrElse(
-          catalog.getTableMetadata(parse(spark, pt)).bucketSpec.get.numBuckets)
-        val dt = Generations.physical(name, "dfcap", lease.gen)
-        // block stamps rebuilt exactly from the compacted postings
-        val it = Generations.physical(name, "impacts", lease.gen)
-        val st = Generations.physical(name, "stats", lease.gen)
-        Par.run(spark, Seq(
-          () => dictRows(spark.table(pt))
-            .write.format("parquet")
-            .bucketBy(nb, "tok").sortBy("tok").saveAsTable(dt),
-          // no repartition (r19): wave 2 reads the NEW postings, whose
-          // forced bucketed scan is already hash(tok) × nb — the stamp
-          // window and (tok, blk) rollup consume that clustering and
-          // the write lands one file per bucket, like the dfcap leg
-          () => impactRows(spark.table(pt), impactBlockRows(spark))
-            .withColumn("batch_id", lit(epoch))
-            .write.format("parquet")
-            .bucketBy(nb, "tok").sortBy("tok").saveAsTable(it),
-          () => spark.table(lt)
-            .agg(count(lit(1)).as("n_docs"), sum(col("len")).as("total_tokens"))
-            .select(lit(epoch).as("batch_id"), col("n_docs"),
-              coalesce(col("total_tokens"), lit(0L)).as("total_tokens"))
-            .coalesce(1)
-            .write.format("parquet").saveAsTable(st)))
-        Seq(pt, lt, dt, st, vt, it).foreach { t =>
-          spark.sql(s"ALTER TABLE $t SET TBLPROPERTIES " +
-            s"('$TokenizerProp' = '$TokenizerId')")
-        }
-        Map.empty[String, String]
+      // members of both generations read bucket by bucket
+      val cs = Generations.bucketedReads(spark)
+      val epoch = s"g${lease.gen}"
+      val tombs = applied0.map(broadcast)
+      def purged(t: String): DataFrame =
+        tombs.fold(cs.table(t))(tt =>
+          cs.table(t).join(tt, Seq("doc_id"), "left_anti"))
+      def rewrite(m: String, bcol: String, df: DataFrame,
+          sortCols: Seq[String]): String = {
+        val old = member(spark, name, m)
+        val sp = catalog.getTableMetadata(parse(spark, old)).bucketSpec
+          .getOrElse(sys.error(s"$old is not a bucketed index table"))
+        val nb = numBuckets.getOrElse(sp.numBuckets)
+        require(nb > 0, s"numBuckets must be positive, got $nb")
+        val nt = Generations.physical(name, m, lease.gen)
+        val shaped =
+          if (nb == sp.numBuckets && sp.bucketColumnNames == Seq(bcol)) df
+          else df.repartition(nb, col(bcol))
+        shaped.write.format("parquet")
+          .bucketBy(nb, bcol).sortBy(sortCols.head, sortCols.tail: _*)
+          .saveAsTable(nt)
+        nt
       }
+      val oldP = member(spark, name, "postings")
+      requireTokenizer(spark, Seq(oldP))
+      // Two waves of independent member writes (guide §2.6 / Par doc):
+      // wave 1 rewrites the row-bearing members from the OLD
+      // generation; wave 2 derives dictionary/stamps/stats by reading
+      // the NEW postings/doclen back (compacted, bucketed — the df
+      // recount rides the (tok) bucketing exchange-free), so it must
+      // wait for wave 1.
+      val pt = Generations.physical(name, "postings", lease.gen)
+      val lt = Generations.physical(name, "doclen", lease.gen)
+      val vt = Generations.physical(name, "vocab", lease.gen)
+      val nbV = numBuckets.getOrElse(
+        catalog.getTableMetadata(parse(spark, oldP)).bucketSpec
+          .getOrElse(sys.error(s"$oldP is not a bucketed index table"))
+          .numBuckets)
+      Par.run(spark, Seq(
+        () => require(rewrite("postings", "tok", purged(oldP),
+          Seq("tok", "doc_id")) == pt),
+        () => require(rewrite("doclen", "doc_id",
+          purged(member(spark, name, "doclen"))
+            .select(col("doc_id"), col("len"), lit(epoch).as("batch_id")),
+          Seq("doc_id")) == lt),
+        // the delta member resets to empty (schema from the old
+        // postings — identical to the compacted table's)
+        () => dictRows(purged(oldP).limit(0)).withColumn("batch_id", lit(""))
+          .coalesce(1).write.format("parquet")
+          .bucketBy(nbV, "tok").sortBy("tok").saveAsTable(vt)))
+      // df/stats rebuilt EXACTLY from the rows that survived — the
+      // moment logical deletions become statistical deletions. The
+      // dictionary consolidates with them: dfcap gets the exact
+      // post-purge (df, max_tf, min_len) per term.
+      val nb = numBuckets.getOrElse(
+        catalog.getTableMetadata(parse(spark, pt)).bucketSpec.get.numBuckets)
+      val dt = Generations.physical(name, "dfcap", lease.gen)
+      // block stamps rebuilt exactly from the compacted postings
+      val it = Generations.physical(name, "impacts", lease.gen)
+      val st = Generations.physical(name, "stats", lease.gen)
+      Par.run(spark, Seq(
+        () => dictRows(cs.table(pt))
+          .write.format("parquet")
+          .bucketBy(nb, "tok").sortBy("tok").saveAsTable(dt),
+        // no repartition (r19): wave 2 reads the NEW postings, whose
+        // forced bucketed scan is already hash(tok) × nb — the stamp
+        // window and (tok, blk) rollup consume that clustering and
+        // the write lands one file per bucket, like the dfcap leg
+        () => impactRows(cs.table(pt), impactBlockRows(spark))
+          .withColumn("batch_id", lit(epoch))
+          .write.format("parquet")
+          .bucketBy(nb, "tok").sortBy("tok").saveAsTable(it),
+        () => cs.table(lt)
+          .agg(count(lit(1)).as("n_docs"), sum(col("len")).as("total_tokens"))
+          .select(lit(epoch).as("batch_id"), col("n_docs"),
+            coalesce(col("total_tokens"), lit(0L)).as("total_tokens"))
+          .coalesce(1)
+          .write.format("parquet").saveAsTable(st)))
+      Seq(pt, lt, dt, st, vt, it).foreach { t =>
+        spark.sql(s"ALTER TABLE $t SET TBLPROPERTIES " +
+          s"('$TokenizerProp' = '$TokenizerId')")
+      }
+      Map.empty[String, String]
     }
     applied0.foreach(Tombstones.clearApplied(spark, name, _))
   }

@@ -18,6 +18,10 @@ package graft.operators
   *    is upgraded to subset states (the lex append's member writes did
   *    exactly that — see appendToLexIndex's in-body argument — while
   *    its stats fence stays strictly after the block);
+  *  - no thunk writes the conf of the session the threads share: it
+  *    would reach every plan another thunk builds meanwhile (a body
+  *    that needs other read settings reads through its own clone —
+  *    [[Generations.bucketedReads]]);
   *  - threads are created FRESH per call: Spark's job-group/description
   *    local properties are InheritableThreadLocal, so fresh threads
   *    inherit the CALLER's group (the bench watchdog can still cancel a
@@ -127,36 +131,5 @@ object Par {
     }
     val e = firstFailure.get()
     if (e != null) throw e
-  }
-
-  /** Reference-counted session-conf override, for the compactions that
-    * force bucketed scans (autoBucketedScan=false) around their
-    * rewrite bodies. The old save/set/restore pattern raced once
-    * compactions of DIFFERENT families overlap (compactAll via
-    * [[run]]): thread B could capture thread A's override as the
-    * "original" and restore the override permanently. With the
-    * counter, the first entrant saves the true original, nested/
-    * concurrent entrants stack, and the last exit restores. */
-  private val confOverrides =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), (Int, String)]()
-
-  def withConfOverride[T](spark: org.apache.spark.sql.SparkSession,
-      key: String, value: String)(body: => T): T = {
-    val mapKey = (spark, key)
-    confOverrides.synchronized {
-      val (depth, saved) = Option(confOverrides.get(mapKey))
-        .getOrElse((0, spark.conf.get(key)))
-      if (depth == 0) spark.conf.set(key, value)
-      confOverrides.put(mapKey, (depth + 1, saved))
-    }
-    try body
-    finally confOverrides.synchronized {
-      val (depth, saved) = confOverrides.get(mapKey)
-      if (depth <= 1) {
-        confOverrides.remove(mapKey)
-        spark.conf.set(key, saved)
-      } else confOverrides.put(mapKey, (depth - 1, saved))
-    }
   }
 }

@@ -654,7 +654,7 @@ object HybridQueries {
           mustNot = Some(phrasesOf(docs, from = 3, len = 1)
             .select(col("phrase_id").as("qid"), col("phrase"))),
           filter = Some(col("doc_id") % 2 === 0))
-        forcedPushdown(s) {
+        withConfs(s, LexIndex.PushdownMinBytesConf -> "0") {
           graft.operators.BooleanQuery.serve(s, name, "graft_s49_ann",
               queriesOf(docs), emb, expr("vec_id < 8"), clauses,
               k = K, kEach = KEach,
@@ -1361,7 +1361,7 @@ object HybridQueries {
     // probe must be bit-identical to the one-shot scorer — a bound
     // that under-estimated, a dropped candidate, or a θ from an
     // excluded doc all flip the hash. The bytes-read reduction is
-    // measured on the Scale100 ladder (SCALE.md).
+    // recorded in SCALE.md, "Round-16: bounded scoring bytes A/B".
     Q("s65_maxscore_serve",
       (s, dir) => {
         val docs = Tables(s, dir, "documents")
@@ -1370,15 +1370,9 @@ object HybridQueries {
           name)
         // force the pushdown branch at fixture scale (the production
         // default keeps small indexes on the plain path)
-        val min0 = s.conf.get(LexIndex.PushdownMinBytesConf, null)
-        val out = try {
-          s.conf.set(LexIndex.PushdownMinBytesConf, "0")
+        withConfs(s, LexIndex.PushdownMinBytesConf -> "0") {
           LexIndex.probeLexIndexMaxScore(s, name, queriesOf(docs), KEach)
-        } finally {
-          if (min0 == null) s.conf.unset(LexIndex.PushdownMinBytesConf)
-          else s.conf.set(LexIndex.PushdownMinBytesConf, min0)
-        }
-        out.orderBy("qid", "lex_rank")
+        }.orderBy("qid", "lex_rank")
       },
       Some(s"""WITH ${HybridRetrieval.lexicalOracleCtes("documents",
           "doc_id < 8", KEach)}
@@ -1660,8 +1654,8 @@ object HybridQueries {
         // sf0.1 the corpus terms' df sums trip the production default,
         // which is the deliberate lossless fallback — not this row's
         // point)
-        withConfs(s, LexIndex.AnchorDocsMaxConf -> "1000000") {
-        forcedPushdown(s) {
+        withConfs(s, LexIndex.AnchorDocsMaxConf -> "1000000",
+            LexIndex.PushdownMinBytesConf -> "0") {
           val out = LexIndex.probePhrase(s, "graft_s72_lex",
               phrasesOf(docs))
             .select(col("phrase_id").as("qid"), col("doc_id"),
@@ -1673,7 +1667,6 @@ object HybridQueries {
           require(LexIndex.lastAnchorStats.exists(_._2 > 0),
             s"anchor pushdown never fired: ${LexIndex.lastAnchorStats}")
           out
-        }
         }
       },
       Some(phraseOracle(corpusPredSql = None))),
@@ -1703,7 +1696,7 @@ object HybridQueries {
             LexIndex.CandidatesMaxConf -> "1000000") {
           LexIndex.writeLexIndex(docs.select(col("doc_id"), col("text")),
             name)
-          forcedPushdown(s) {
+          withConfs(s, LexIndex.PushdownMinBytesConf -> "0") {
             val out = LexIndex.probeLexIndexMaxScore(s, name,
               queriesOf(docs), KEach)
             // non-vacuity (house rule): the row's point is block
@@ -1734,13 +1727,12 @@ object HybridQueries {
         val name = "graft_s74_lex"
         LexIndex.writeLexIndex(docs.select(col("doc_id"), col("text")),
           name)
-        withConfs(s, LexIndex.PairBroadcastMaxConf -> "0") {
-          forcedPushdown(s) {
-            val pm = LexIndex.probePhrase(s, name, phrasesOf(docs))
-              .select(col("phrase_id").as("qid"), col("doc_id"))
-            LexIndex.probeLexIndexMaxScore(s, name, queriesOf(docs),
-              KEach, candPairs = Some(pm))
-          }
+        withConfs(s, LexIndex.PairBroadcastMaxConf -> "0",
+            LexIndex.PushdownMinBytesConf -> "0") {
+          val pm = LexIndex.probePhrase(s, name, phrasesOf(docs))
+            .select(col("phrase_id").as("qid"), col("doc_id"))
+          LexIndex.probeLexIndexMaxScore(s, name, queriesOf(docs),
+            KEach, candPairs = Some(pm))
         }.orderBy("qid", "lex_rank")
       },
       Some(s"""WITH ${phraseCtes(None)},
@@ -1964,7 +1956,7 @@ object HybridQueries {
         .select(col("phrase_id").as("qid"), col("doc_id"),
           col("first_pos")))
     val ranked =
-      if (bounded) forcedPushdown(s) {
+      if (bounded) withConfs(s, LexIndex.PushdownMinBytesConf -> "0") {
         LexIndex.probeLexIndexMaxScore(s, name, queriesOf(docs),
           KEach, candPairs = Some(pm.select("qid", "doc_id")))
       }
@@ -2035,9 +2027,9 @@ object HybridQueries {
         AS lex_rank FROM lexs2) WHERE lex_rank <= $kEach)"""
 
   /** Set session confs for the duration of `body`, restoring the
-    * previous values (or unsetting) after — the forcedPushdown shape
-    * generalized for the s73/s74 conf-forced twins. The confs matter
-    * at CONSTRUCTION time (the eager pushdown collects); the returned
+    * previous values (or unsetting) after — every conf-forced row
+    * (forced pushdown, the s72–s74 twins). The confs matter at
+    * CONSTRUCTION time (the eager pushdown collects); the returned
     * plan carries their effect as literals, so restoring immediately
     * is safe. */
   private def withConfs[A](s: SparkSession, kvs: (String, String)*)(
@@ -2046,17 +2038,6 @@ object HybridQueries {
     try { kvs.foreach { case (k, v) => s.conf.set(k, v) }; body }
     finally olds.foreach { case (k, v) =>
       if (v == null) s.conf.unset(k) else s.conf.set(k, v) }
-  }
-
-  private def forcedPushdown[A](s: SparkSession)(body: => A): A = {
-    val min0 = s.conf.get(LexIndex.PushdownMinBytesConf, null)
-    try {
-      s.conf.set(LexIndex.PushdownMinBytesConf, "0")
-      body
-    } finally {
-      if (min0 == null) s.conf.unset(LexIndex.PushdownMinBytesConf)
-      else s.conf.set(LexIndex.PushdownMinBytesConf, min0)
-    }
   }
 
   private def phrasesOf(docs: DataFrame, from: Int = 1,

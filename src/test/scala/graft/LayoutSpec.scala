@@ -296,8 +296,7 @@ class LayoutSpec extends SparkSpec {
         concat(col("text"), lit(" zz pad")).as("text"))
     val plain = Dedup.incrementalNearDupSurvivorsIndexed(
       spark, "graft_test_ndidx_push", batch).collect().map(_.getLong(0)).sorted
-    try {
-      spark.conf.set(Dedup.PushdownMinBytesConf, "0")
+    withConfs(Dedup.PushdownMinBytesConf -> "0") {
       val pushed = Dedup.incrementalNearDupSurvivorsIndexed(
         spark, "graft_test_ndidx_push", batch).collect()
         .map(_.getLong(0)).sorted
@@ -313,7 +312,7 @@ class LayoutSpec extends SparkSpec {
             .as("text"))
       assert(Dedup.incrementalNearDupSurvivorsIndexed(
         spark, "graft_test_ndidx_push", fresh).count() == 4)
-    } finally spark.conf.unset(Dedup.PushdownMinBytesConf)
+    }
   }
 
   test("hive-partitioned layout prunes whole files at listing time") {

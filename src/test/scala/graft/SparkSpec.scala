@@ -8,6 +8,18 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sf: String = "/root/testdata/sf0.001"
 
+  /** Run `body` with each key set on the session conf, then restore
+    * each key's old value, or unset a key that was unset before. */
+  def withConfs[A](kvs: (String, String)*)(body: => A): A = {
+    val olds = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally olds.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Drop a managed test table AND its warehouse directory. The
     * in-memory catalog dies with each JVM but the directory does not,
     * so a plain DROP TABLE IF EXISTS in a fresh JVM no-ops while the

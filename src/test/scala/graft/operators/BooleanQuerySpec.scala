@@ -88,14 +88,9 @@ class BooleanQuerySpec extends SparkSpec {
       // from the CONSTRAINED list, so the equality here is the
       // lossless-under-candidacy proof the r16 verdict asked for
       // (forced pushdown floor so the bounded path actually runs)
-      val min0 = spark.conf.get(LexIndex.PushdownMinBytesConf, null)
-      val gotB = try {
-        spark.conf.set(LexIndex.PushdownMinBytesConf, "0")
+      val gotB = withConfs(LexIndex.PushdownMinBytesConf -> "0") {
         rows(BooleanQuery.search(spark, name, queries, 10, clauses,
           bounded = true))
-      } finally {
-        if (min0 == null) spark.conf.unset(LexIndex.PushdownMinBytesConf)
-        else spark.conf.set(LexIndex.PushdownMinBytesConf, min0)
       }
       assert(gotB == want, s"bounded API != hand-wired at $combo")
       // the pair-set broadcasts are size-GATED (r17 verdict finding
@@ -104,21 +99,14 @@ class BooleanQuerySpec extends SparkSpec {
       // must be identical (the gate moves the join strategy, never
       // the rows)
       if (useMust || useShould || useNot) {
-        val bc0 = spark.conf.get(LexIndex.PairBroadcastMaxConf, null)
-        val min0b = spark.conf.get(LexIndex.PushdownMinBytesConf, null)
-        val (gotS, gotSB) = try {
-          spark.conf.set(LexIndex.PairBroadcastMaxConf, "0")
+        val (gotS, gotSB) = withConfs(LexIndex.PairBroadcastMaxConf -> "0") {
           val full = rows(BooleanQuery.search(spark, name, queries, 10,
             clauses))
-          spark.conf.set(LexIndex.PushdownMinBytesConf, "0")
-          val bnd = rows(BooleanQuery.search(spark, name, queries, 10,
-            clauses, bounded = true))
+          val bnd = withConfs(LexIndex.PushdownMinBytesConf -> "0") {
+            rows(BooleanQuery.search(spark, name, queries, 10,
+              clauses, bounded = true))
+          }
           (full, bnd)
-        } finally {
-          if (bc0 == null) spark.conf.unset(LexIndex.PairBroadcastMaxConf)
-          else spark.conf.set(LexIndex.PairBroadcastMaxConf, bc0)
-          if (min0b == null) spark.conf.unset(LexIndex.PushdownMinBytesConf)
-          else spark.conf.set(LexIndex.PushdownMinBytesConf, min0b)
         }
         assert(gotS == want, s"shuffle-fallback != hand-wired at $combo")
         assert(gotSB == want,

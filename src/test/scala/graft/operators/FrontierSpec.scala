@@ -1,5 +1,10 @@
 package graft.operators
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
+import org.apache.spark.sql.execution.SortExec
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 
 import graft.{SparkEntry, SparkSpec}
@@ -8,13 +13,13 @@ import graft.{SparkEntry, SparkSpec}
   * pipeline returns the same rows whether the frontier lives in
   * executor-local blocks (default) or in a fault-tolerant checkpoint
   * (`graft.pin.reliable=true` — the cluster-scale mode, where losing
-  * an executor after the pin must not lose the frame). */
-class FrontierSpec extends SparkSpec {
+  * an executor after the pin must not lose the frame). A
+  * [[Frontier.pinPartitioned]] pin carries its layout to consumers in
+  * both modes without touching the conf of the session it shares. */
+class FrontierSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
-  private def inReliableMode[A](body: => A): A = {
-    spark.conf.set(Frontier.ReliableConf, "true")
-    try body finally spark.conf.set(Frontier.ReliableConf, "false")
-  }
+  private def inReliableMode[A](body: => A): A =
+    withConfs(Frontier.ReliableConf -> "true")(body)
 
   test("reliable pin checkpoints instead of localCheckpoint, same rows") {
     import spark.implicits._
@@ -86,4 +91,47 @@ class FrontierSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq)
     assert(got == expected)
   }
+
+  test("a pinPartitioned in flight leaves the shared session adaptive") {
+    import FrontierSpec.{entered, release}
+    val gate = udf { (x: Long) =>
+      entered.countDown(); release.await(60, TimeUnit.SECONDS); x }
+    val df = spark.range(0, 8, 1, 2).select(gate(col("id")).as("k"))
+      .repartition(2, col("k"))
+    val pinner = new Thread(() => { Frontier.pinPartitioned(df); () })
+    pinner.start()
+    try {
+      assert(entered.await(60, TimeUnit.SECONDS), "the pin job never ran")
+      // the pin's materializing job is blocked in the UDF right now
+      assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+      val fresh = spark.range(0, 100, 1, 4).groupBy(col("id") % 3).count()
+      assert(fresh.queryExecution.executedPlan
+        .isInstanceOf[AdaptiveSparkPlanExec])
+    } finally {
+      release.countDown()
+      pinner.join()
+    }
+  }
+
+  test("a consumer keyed like the pin plans no exchange and no sort") {
+    import spark.implicits._
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val src = (1 to 200).map(i => (i % 17L, i.toLong)).toDF("k", "v")
+      .repartition(5, col("k")).sortWithinPartitions("k")
+    def check(pinned: org.apache.spark.sql.DataFrame): Unit = {
+      val agg = pinned.groupBy("k").agg(count(lit(1)).as("n"), max("v"))
+      assert(agg.collect().map(_.getLong(1)).sum == 200L)
+      val plan = agg.queryExecution.executedPlan
+      assert(collect(plan) { case e: ShuffleExchangeLike => e }.isEmpty, plan)
+      assert(collect(plan) { case s: SortExec => s }.isEmpty, plan)
+    }
+    check(Frontier.pinPartitioned(src))
+    check(inReliableMode(Frontier.pinPartitioned(src)))
+  }
+}
+
+object FrontierSpec {
+  // task closures reach these statically (a latch is not serializable)
+  val entered = new CountDownLatch(1)
+  val release = new CountDownLatch(1)
 }

@@ -32,9 +32,7 @@ class LexIndexSpec extends SparkSpec {
       "filter reaches the postings scan)") {
     LexIndex.destroy(spark, "graft_t_lex1")
     LexIndex.writeLexIndex(docs, "graft_t_lex1", numBuckets = 4)
-    val min0 = spark.conf.get(LexIndex.PushdownMinBytesConf, null)
-    try {
-      spark.conf.set(LexIndex.PushdownMinBytesConf, "0")
+    withConfs(LexIndex.PushdownMinBytesConf -> "0") {
       assert(probe("graft_t_lex1").sameElements(oneShot))
       // the bounded term set must reach the postings scan as a pushed
       // In-filter — that is what turns sorted buckets into row-group
@@ -43,9 +41,6 @@ class LexIndexSpec extends SparkSpec {
         .queryExecution.executedPlan.toString
       assert(plan.contains("graft_t_lex1_postings"), plan)
       assert(plan.contains("PushedFilters: [In(tok"), plan)
-    } finally {
-      if (min0 == null) spark.conf.unset(LexIndex.PushdownMinBytesConf)
-      else spark.conf.set(LexIndex.PushdownMinBytesConf, min0)
     }
   }
 
@@ -54,17 +49,10 @@ class LexIndexSpec extends SparkSpec {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     LexIndex.destroy(spark, "graft_t_lex2")
     LexIndex.writeLexIndex(docs, "graft_t_lex2", numBuckets = 4)
-    val conf = spark.conf
-    val (aqe0, bjt0) = (conf.get("spark.sql.adaptive.enabled"),
-      conf.get("spark.sql.autoBroadcastJoinThreshold"))
-    val plan = try {
-      conf.set("spark.sql.adaptive.enabled", "false")
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val plan = withConfs("spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       LexIndex.probeLexIndex(spark, "graft_t_lex2", queries, 10)
         .queryExecution.executedPlan
-    } finally {
-      conf.set("spark.sql.adaptive.enabled", aqe0)
-      conf.set("spark.sql.autoBroadcastJoinThreshold", bjt0)
     }
     def isPostingsScan(p: SparkPlan): Boolean = p match {
       case f: FileSourceScanExec => f.relation.location.rootPaths
@@ -235,16 +223,11 @@ class LexIndexSpec extends SparkSpec {
     }
     // probePrefix touches postings ONLY for the capped expansions'
     // matching stage — with the In(tok) pushdown, not a full scan
-    val min0 = spark.conf.get(LexIndex.PushdownMinBytesConf, null)
-    try {
-      spark.conf.set(LexIndex.PushdownMinBytesConf, "0")
+    withConfs(LexIndex.PushdownMinBytesConf -> "0") {
       val plan = LexIndex.probePrefix(spark, name, prefixes, 4)
         .queryExecution.executedPlan.toString
       assert(plan.contains("PushedFilters: [In(tok"),
         s"prefix matching stage lost the In(tok) pushdown:\n$plan")
-    } finally {
-      if (min0 == null) spark.conf.unset(LexIndex.PushdownMinBytesConf)
-      else spark.conf.set(LexIndex.PushdownMinBytesConf, min0)
     }
     LexIndex.destroy(spark, name)
   }
@@ -428,10 +411,7 @@ class LexIndexSpec extends SparkSpec {
         posexplode(slice(tk, 2, 3)).as(Seq("off", "tok")))
     def rows(df: DataFrame) =
       df.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
-    val min0 = spark.conf.get(LexIndex.PushdownMinBytesConf, null)
-    val anc0 = spark.conf.get(LexIndex.AnchorDocsMaxConf, null)
-    try {
-      spark.conf.set(LexIndex.PushdownMinBytesConf, "0")
+    withConfs(LexIndex.PushdownMinBytesConf -> "0") {
       val phOn = rows(LexIndex.probePhrase(spark, name, phrases))
       assert(LexIndex.lastAnchorStats.exists(_._2 > 0),
         s"phrase anchor pushdown never fired: ${LexIndex.lastAnchorStats}")
@@ -448,15 +428,15 @@ class LexIndexSpec extends SparkSpec {
         "proximity-n anchor pushdown never fired")
       // budget 0 = the unanchored scan: identical rows on all three
       // (the anchor only removes reads, never matches)
-      spark.conf.set(LexIndex.AnchorDocsMaxConf, "0")
-      assert(rows(LexIndex.probePhrase(spark, name, phrases)) == phOn,
-        "phrase probe moved under the anchor pushdown")
-      assert(LexIndex.lastAnchorStats.isEmpty)
-      assert(rows(LexIndex.probeProximity(spark, name, pairs, 3)) == pxOn,
-        "proximity probe moved under the anchor pushdown")
-      assert(rows(LexIndex.probeProximityN(spark, name, clauses, 4)) ==
-        pnOn, "proximity-n probe moved under the anchor pushdown")
-      spark.conf.unset(LexIndex.AnchorDocsMaxConf)
+      withConfs(LexIndex.AnchorDocsMaxConf -> "0") {
+        assert(rows(LexIndex.probePhrase(spark, name, phrases)) == phOn,
+          "phrase probe moved under the anchor pushdown")
+        assert(LexIndex.lastAnchorStats.isEmpty)
+        assert(rows(LexIndex.probeProximity(spark, name, pairs, 3)) == pxOn,
+          "proximity probe moved under the anchor pushdown")
+        assert(rows(LexIndex.probeProximityN(spark, name, clauses, 4)) ==
+          pnOn, "proximity-n probe moved under the anchor pushdown")
+      }
       // a phrase whose every token is dictionary-absent is unmatchable:
       // the anchored scan reads NOTHING (Some(Nil) → lit(false)) and
       // returns empty — and so does the unanchored truth
@@ -466,11 +446,6 @@ class LexIndexSpec extends SparkSpec {
         "ghost phrase matched")
       assert(LexIndex.lastAnchorStats.contains((0, 0)),
         s"unmatchable group did not short-circuit: ${LexIndex.lastAnchorStats}")
-    } finally {
-      if (min0 == null) spark.conf.unset(LexIndex.PushdownMinBytesConf)
-      else spark.conf.set(LexIndex.PushdownMinBytesConf, min0)
-      if (anc0 == null) spark.conf.unset(LexIndex.AnchorDocsMaxConf)
-      else spark.conf.set(LexIndex.AnchorDocsMaxConf, anc0)
     }
     LexIndex.destroy(spark, name)
   }
@@ -649,9 +624,7 @@ class LexIndexSpec extends SparkSpec {
     // proves less than it reads)
     assert(want(2) != want(1000), "fixture cap degenerate")
     // forced pushdown: the prefix disjunction reaches the scan
-    val min0 = spark.conf.get(LexIndex.PushdownMinBytesConf, null)
-    try {
-      spark.conf.set(LexIndex.PushdownMinBytesConf, "0")
+    withConfs(LexIndex.PushdownMinBytesConf -> "0") {
       val got = LexIndex.probePrefix(spark, name, prefixes, 8)
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
         .toMap
@@ -669,9 +642,6 @@ class LexIndexSpec extends SparkSpec {
       val plan = LexIndex.probePrefix(spark, name, prefixes, 8)
         .queryExecution.executedPlan.toString
       assert(plan.contains("PushedFilters: [In(tok"), plan)
-    } finally {
-      if (min0 == null) spark.conf.unset(LexIndex.PushdownMinBytesConf)
-      else spark.conf.set(LexIndex.PushdownMinBytesConf, min0)
     }
     // tombstoned docs lose candidacy immediately
     val victim = want(8).keys.head._2
@@ -736,9 +706,7 @@ class LexIndexSpec extends SparkSpec {
   test("probeLexIndexMaxScore: bit-identical to probeLexIndex, and the " +
       "essential split prunes a heavy low-impact list on a skew fixture") {
     import spark.implicits._
-    val min0 = spark.conf.get(LexIndex.PushdownMinBytesConf, null)
-    try {
-      spark.conf.set(LexIndex.PushdownMinBytesConf, "0")
+    withConfs(LexIndex.PushdownMinBytesConf -> "0") {
       // equality on the regular corpus (forced pushdown)
       val name = "graft_t_lexms"
       LexIndex.destroy(spark, name)
@@ -811,9 +779,6 @@ class LexIndexSpec extends SparkSpec {
           .collect().map(_.toString).sorted),
         "fixture degenerate: the append did not move the current probe")
       LexIndex.destroy(spark, sName)
-    } finally {
-      if (min0 == null) spark.conf.unset(LexIndex.PushdownMinBytesConf)
-      else spark.conf.set(LexIndex.PushdownMinBytesConf, min0)
     }
   }
 
@@ -822,11 +787,8 @@ class LexIndexSpec extends SparkSpec {
       "re-walked through append and compaction") {
     import spark.implicits._
     val name = "graft_t_lexbm"
-    val min0 = spark.conf.get(LexIndex.PushdownMinBytesConf, null)
-    val blk0 = spark.conf.get(LexIndex.ImpactBlockRowsConf, null)
-    try {
-      spark.conf.set(LexIndex.PushdownMinBytesConf, "0")
-      spark.conf.set(LexIndex.ImpactBlockRowsConf, "32")
+    withConfs(LexIndex.PushdownMinBytesConf -> "0",
+        LexIndex.ImpactBlockRowsConf -> "32") {
       LexIndex.destroy(spark, name)
       // SPIKY fixture (the BMW regime): `bulk` sits in 60% of docs —
       // low idf but a df-cap survivor — with tf=1 in long docs except
@@ -862,9 +824,7 @@ class LexIndexSpec extends SparkSpec {
       // far below the term's block count, skipping must STILL fire —
       // top-B stamps individually, the dropped tail as one dominated
       // virtual rest-stamp — and stay bit-identical to the full probe
-      val ptm0 = spark.conf.get(LexIndex.ImpactsPerTermMaxConf, null)
-      try {
-        spark.conf.set(LexIndex.ImpactsPerTermMaxConf, "4")
+      withConfs(LexIndex.ImpactsPerTermMaxConf -> "4") {
         run(3)
         val Some((_, keptB, totalB)) = LexIndex.lastBlockStats
         assert(totalB == 5,
@@ -872,9 +832,6 @@ class LexIndexSpec extends SparkSpec {
             "virtual)")
         assert(keptB < totalB,
           s"skipping under per-term budget never fired: $keptB/$totalB")
-      } finally {
-        if (ptm0 == null) spark.conf.unset(LexIndex.ImpactsPerTermMaxConf)
-        else spark.conf.set(LexIndex.ImpactsPerTermMaxConf, ptm0)
       }
       // append ten MORE spiky docs at the high end: their stamps land
       // as the batch's own blocks; the bounded probe must pick them up
@@ -903,11 +860,6 @@ class LexIndexSpec extends SparkSpec {
         .collect().map(_.toString).sorted
       assert(bF.sameElements(fF), "bounded != full under candPred")
       LexIndex.destroy(spark, name)
-    } finally {
-      if (min0 == null) spark.conf.unset(LexIndex.PushdownMinBytesConf)
-      else spark.conf.set(LexIndex.PushdownMinBytesConf, min0)
-      if (blk0 == null) spark.conf.unset(LexIndex.ImpactBlockRowsConf)
-      else spark.conf.set(LexIndex.ImpactBlockRowsConf, blk0)
     }
   }
 
