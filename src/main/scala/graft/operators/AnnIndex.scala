@@ -131,12 +131,10 @@ object AnnIndex {
       else books0
     val cents = spark.sparkContext.broadcast(trained)
     val bb = spark.sparkContext.broadcast(books)
-    // pinned pre-rebuild pending set: only IT is stale after the flip
-    // (a takedown racing the flip targets the live index and survives
-    // the clearApplied below)
-    val stale0 = annTombstones(spark, name)
-      .map(t => Frontier.pin(t.select(col("vec_id")).distinct()))
-    Generations.swap(spark, name, IndexMembers, gcKeep = gcKeep) { lease =>
+    // a rebuild (or retrain) defines the index's contents from the
+    // corpus it was handed: the pending set against the replaced
+    // generation is stale, not erased (Tombstones.rebuild)
+    Tombstones.rebuild(spark, name, IndexMembers, "vec_id", gcKeep) { lease =>
       val ct = Generations.physical(name, "cells", lease.gen)
       val mt = Generations.physical(name, "model", lease.gen)
       // three independent jobs inside the atomic swap — the corpus
@@ -166,12 +164,6 @@ object AnnIndex {
       }
       Map.empty
     }
-    // a rebuild (or retrain) defines the index's contents from the
-    // corpus it was handed — tombstones against the replaced
-    // generation are stale; subtract exactly those (clearStale: no
-    // erased-registry claim, the vecs may be present in the fresh
-    // build), never a takedown that raced the flip
-    stale0.foreach(Tombstones.clearStale(spark, name, _))
   }
 
   /** (vec_id, codes, cell) for `emb` under the given frozen model —
@@ -264,8 +256,7 @@ object AnnIndex {
     // resolves UNDER the lease so the insert can't land in a
     // just-retired generation. The insert itself is ONE parquet job
     // (atomic), and ifAbsent's anti-join makes replays idempotent.
-    val lease = Generations.begin(spark, name, IndexMembers)
-    try {
+    Generations.leased(spark, name, IndexMembers) {
       val (dim, m, _, residual) = geometry(spark, name)
       val scope = scopeOf(spark, name)
       require(scope.forall(batch.columns.contains),
@@ -288,7 +279,7 @@ object AnnIndex {
         .write.format("parquet").mode("append").partitionBy("cell")
         .saveAsTable(ct)
       spark.catalog.refreshTable(ct)
-    } finally Generations.abort(spark, lease)
+    }
   }
 
   /** Probe the persisted index: ADC scoring against the codes of the
@@ -399,7 +390,7 @@ object AnnIndex {
     // deletions apply logically at probe time: tombstoned vectors are
     // invisible the instant [[tombstoneAnn]] lands; the next
     // compaction/retrain reclaims their codes physically
-    val base0 = annTombstones(spark, name).fold(
+    val base0 = Tombstones.get(spark, name).fold(
       spark.table(ct))(tt =>
       spark.table(ct).join(
         broadcast(tt.select(col("vec_id")).distinct()),
@@ -494,7 +485,6 @@ object AnnIndex {
     * `nCells` is the ANN resize path (same one-swap atomicity). */
   def compactAnnIndex(spark: SparkSession, name: String,
       gcKeep: Int = 1): Unit = {
-    Tombstones.requireErasurePurges(spark, name, gcKeep)
     val t = cellsTable(spark, name)
     val mt0 = modelTable(spark, name)
     val (dim, m, ksub, residual) = geometry(spark, name)
@@ -502,15 +492,12 @@ object AnnIndex {
     val nCells = stamp(p, t, NCellsProp).toInt
     val baseDist = stamp(p, t, BaseDistProp)
     val scope = scopeOf(spark, name) // carried: a lost stamp would
-    // tombstoned deletions become physical here; captured PINNED up
-    // front so the post-flip clear subtracts exactly this set — a
-    // takedown racing the flip stays pending instead of being wiped
-    val applied0 = annTombstones(spark, name)
-      .map(t => Frontier.pin(t.select(col("vec_id")).distinct()))
-    Generations.swap(spark, name, IndexMembers, gcKeep = gcKeep) { lease =>
+    // tombstoned deletions become physical here (Tombstones.compaction)
+    Tombstones.compaction(spark, name, IndexMembers, "vec_id", gcKeep) {
+        (lease, applied) =>
       val ct = Generations.physical(name, "cells", lease.gen)
       val mt = Generations.physical(name, "model", lease.gen)
-      val src = applied0.fold(spark.table(t))(tt =>
+      val src = applied.fold(spark.table(t))(tt =>
         spark.table(t).join(broadcast(tt),
           Seq("vec_id"), "left_anti"))
       // the two member rewrites are independent — overlapped (Par doc)
@@ -533,29 +520,14 @@ object AnnIndex {
       }
       Map.empty
     }
-    applied0.foreach(Tombstones.clearApplied(spark, name, _))
   }
 
-  /** The persisted deletion set of index `name` (None when empty) —
-    * the ANN twin of [[Dedup.nearDupTombstones]]: probes anti-join it,
-    * the next compaction/rebuild reclaims rows and clears it. */
-  def annTombstones(spark: SparkSession,
-      name: String): Option[DataFrame] =
-    Tombstones.get(spark, name)
-
-  /** DELETE vectors from the maintained ANN index (takedown lifecycle,
-    * [[Dedup.tombstoneNearDup]]'s twin): immediate logical effect at
-    * every probe, physical reclamation at the next compaction or
-    * retrain. Held under the writer lease so a tombstone cannot land
-    * mid-compaction and be cleared unapplied. Idempotent; the mutation
-    * is a crash-atomic [[Tombstones]] generation swap (a crash
-    * mid-write cannot lose the pending erasure set). */
+  /** DELETE vectors from the maintained ANN index — the
+    * [[Tombstones.takedown]] contract: immediate at every probe,
+    * physical at the next compaction or retrain. */
   def tombstoneAnn(spark: SparkSession, name: String,
-      ids: DataFrame): Unit = {
-    val lease = Generations.begin(spark, name, IndexMembers)
-    try Tombstones.add(spark, name, ids, "vec_id")
-    finally Generations.abort(spark, lease)
-  }
+      ids: DataFrame): Unit =
+    Tombstones.takedown(spark, name, IndexMembers, ids, "vec_id")
 
   /** Drift of the CURRENT corpus against the index's frozen model:
     * mean distance-to-centroid now, divided by the build-time baseline

@@ -801,17 +801,14 @@ object Dedup {
   def writeNearDupIndex(hist: DataFrame, name: String, numBuckets: Int = 8,
       k: Int = 5, gcKeep: Int = 1): Unit = {
     val spark = hist.sparkSession
-    // capture (pinned) the pending set that predates this rebuild —
-    // only IT is stale once the rebuild flips; a takedown landing
-    // after the flip targets the LIVE index and must survive the clear
-    val stale0 = nearDupTombstones(spark, name)
-      .map(t => Frontier.pin(t.select(col("doc_id")).distinct()))
     // generation-pointer discipline (Generations): the new generation
     // is written completely while any current one stays live; ONE
     // pointer flip publishes it. A rebuild over an existing index is
     // therefore reader-safe and crash-atomic — the old generation
-    // serves probes until the instant the new one is complete.
-    Generations.swap(spark, name, IndexMembers, gcKeep = gcKeep) { lease =>
+    // serves probes until the instant the new one is complete. The
+    // rebuild defines the contents from scratch, so tombstones against
+    // the replaced generation are stale, not erased (Tombstones.rebuild).
+    Tombstones.rebuild(spark, name, IndexMembers, "doc_id", gcKeep) { lease =>
       val bt = Generations.physical(name, "buckets", lease.gen)
       val st = Generations.physical(name, "sigs", lease.gen)
       val hs = Frontier.pin(signatures(hist, k))
@@ -836,12 +833,6 @@ object Dedup {
       }
       Map.empty
     }
-    // a rebuild defines the index's contents from scratch: tombstones
-    // against the REPLACED generation are stale and would wrongly
-    // suppress matches against the fresh entries — remove exactly
-    // those (clearStale: no erased-registry claim, the docs may be
-    // present in the fresh build), never a takedown racing the flip
-    stale0.foreach(Tombstones.clearStale(spark, name, _))
   }
 
   /** The near-dup index family's members under [[Generations]]. */
@@ -920,19 +911,17 @@ object Dedup {
     * instead of duplicating bucket entries.
     *
     * The whole mutation holds the family's writer lease
-    * ([[Generations.begin]]/[[Generations.abort]] — acquire/release
-    * without a pointer flip: an append mutates the CURRENT generation
-    * in place). This fences the lost-update race with a concurrent
-    * compaction/rebuild: unfenced, the append's rows could land in the
-    * old generation an instant before the compacted one (built from a
-    * scan that predates them) is published — silently dropping the
-    * batch. Table names resolve UNDER the lease for the same reason. */
+    * ([[Generations.leased]] — acquire/release without a pointer flip:
+    * an append mutates the CURRENT generation in place). This fences
+    * the lost-update race with a concurrent compaction/rebuild:
+    * unfenced, the append's rows could land in the old generation an
+    * instant before the compacted one (built from a scan that predates
+    * them) is published — silently dropping the batch. Table names
+    * resolve UNDER the lease for the same reason. */
   def appendToNearDupIndex(batch: DataFrame, name: String, k: Int = 5,
       ifAbsent: Boolean = false): Unit = {
     val spark = batch.sparkSession
-    val catalog = spark.sessionState.catalog
-    val lease = Generations.begin(spark, name, IndexMembers)
-    try {
+    Generations.leased(spark, name, IndexMembers) {
       requireShingleK(spark, name, k)
       val (bt, st) = (bucketsTable(spark, name), sigsTable(spark, name))
       // barReplayed: a replay after an erasure compaction purged this
@@ -952,23 +941,14 @@ object Dedup {
           spark.table(bt).select("doc_id").distinct(),
           Seq("doc_id"), "left_anti")
         else bands
-      // appends reuse the catalog's bucket count on the canonical
-      // single-column layout (see writeNearDupIndex)
-      def appendWith(df: DataFrame, t: String, bcol: String): Unit = {
-        val nb = catalog.getTableMetadata(
-            spark.sessionState.sqlParser.parseTableIdentifier(t))
-          .bucketSpec.getOrElse(sys.error(s"$t is not a bucketed index table"))
-          .numBuckets
-        df.write.format("parquet").mode("append")
-          .bucketBy(nb, bcol).sortBy(bcol).saveAsTable(t)
-      }
-      appendWith(bandsToAdd, bt, "bh")
-      appendWith(bs.select(col("doc_id"), col("shs")), st, "doc_id")
+      // appends reuse the catalog's bucket layout (see writeNearDupIndex)
+      Generations.appendBucketed(bandsToAdd, bt)
+      Generations.appendBucketed(bs.select(col("doc_id"), col("shs")), st)
       // make the append visible to THIS session's next probe even if
       // the insert path left a cached file listing behind (other
       // sessions must refresh on their side — caches are per-session)
       Seq(bt, st).foreach(spark.catalog.refreshTable)
-    } finally Generations.abort(spark, lease)
+    }
   }
 
   /** Index COMPACTION: rewrite both index tables in place, collapsing
@@ -1031,92 +1011,45 @@ object Dedup {
     * executor's comfortable scan. */
   def compactNearDupIndex(spark: SparkSession, name: String,
       gcKeep: Int = 1, numBuckets: Option[Int] = None): Unit = {
-    Tombstones.requireErasurePurges(spark, name, gcKeep)
-    val catalog = spark.sessionState.catalog
     // compaction is where tombstoned deletions become PHYSICAL: the
-    // rewrite drops their rows from both tables. Captured PINNED up
-    // front: the clear afterwards subtracts exactly this set
-    // (Tombstones.clearApplied), so a takedown racing the capture or
-    // the flip stays pending for the next pass instead of being wiped
-    // unapplied.
-    val applied0 = nearDupTombstones(spark, name)
-      .map(t => Frontier.pin(t.select(col("doc_id")).distinct()))
-    // generation swap (Generations): BOTH compacted tables are written
+    // rewrite drops their rows from both tables (Tombstones.compaction).
+    // Generation swap (Generations): BOTH compacted tables are written
     // to the next generation, then one pointer flip publishes them
     // together — a probe racing the compaction reads either the old
     // pair or the new pair, never a mix, and a crash at any point
-    // leaves a complete index live (the old drop-and-rename had a
-    // no-table window between the drop and the rename).
-    Generations.swap(spark, name, IndexMembers, gcKeep = gcKeep) { lease =>
+    // leaves a complete index live.
+    Tombstones.compaction(spark, name, IndexMembers, "doc_id", gcKeep) {
+        (lease, applied) =>
       // old-generation members read bucket by bucket
       val cs = Generations.bucketedReads(spark)
-      val tombs = applied0.map(broadcast)
+      val tombs = applied.map(broadcast)
       // member rewrites are independent (disjoint targets, old-gen
       // sources) — overlapped per guide §2.6 (Par doc)
       Par.run(spark, IndexMembers.map { member => () =>
         val t = Generations.resolve(spark, name, member)
-        val meta = catalog
-          .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(t))
-        val spec = meta.bucketSpec
-          .getOrElse(sys.error(s"$t is not a bucketed index table"))
-        val k = meta.properties.getOrElse(ShingleKProp,
-          sys.error(s"$t has no $ShingleKProp property"))
+        val k = storedShingleK(spark, t)
+        val nt = Generations.physical(name, member, lease.gen)
         // the CANONICAL layout (see writeNearDupIndex): single bucket
         // column + sort
         val bcol = if (member == "buckets") "bh" else "doc_id"
-        val nb = numBuckets.getOrElse(spec.numBuckets)
-        require(nb > 0, s"numBuckets must be positive, got $nb")
-        val nt = Generations.physical(name, member, lease.gen)
-        val src = tombs.fold(cs.table(t))(tt =>
-          cs.table(t).join(tt, Seq("doc_id"), "left_anti"))
-        // same count: the forced-bucketed scan owns one bucket per
-        // task — a narrow per-bucket file merge, no exchange. A RESIZE
-        // can't reuse the old partitioning: one explicit hash exchange
-        // to the new layout (task count pinned — the AQE serial-writer
-        // trap), then the bucketed write lands one sorted file set per
-        // bucket.
-        val shaped =
-          if (nb == spec.numBuckets) src else src.repartition(nb, col(bcol))
-        shaped.write.format("parquet")
-          .bucketBy(nb, bcol).sortBy(bcol)
-          .saveAsTable(nt)
+        Generations.rewriteBucketed(tombs.fold(cs.table(t))(tt =>
+            cs.table(t).join(tt, Seq("doc_id"), "left_anti")),
+          t, nt, bcol, Seq(bcol), numBuckets)
         spark.sql(s"ALTER TABLE $nt SET TBLPROPERTIES ('$ShingleKProp' = '$k')")
       })
       Map.empty[String, String]
     }
-    // after the flip the new generation no longer holds the rows, so
-    // the APPLIED tombstones are inert — subtract exactly them. A
-    // crash between flip and clear just leaves no-op tombstones for
-    // the next compaction (probe anti-joins of absent ids), so the
-    // pair of steps needs no atomicity.
-    applied0.foreach(Tombstones.clearApplied(spark, name, _))
   }
-
-  /** The persisted deletion set of index `name` — applied LOGICALLY by
-    * every probe (tombstoned entries stop being duplicate evidence
-    * immediately) and PHYSICALLY by the next compaction (rows dropped,
-    * set cleared). None when nothing is tombstoned. */
-  def nearDupTombstones(spark: SparkSession,
-      name: String): Option[DataFrame] =
-    Tombstones.get(spark, name)
 
   /** DELETE from the maintained index (takedown/right-to-erasure — the
     * lifecycle step appends and compactions don't cover): record the
-    * doc ids as tombstones. Effect is immediate at every probe (the
-    * entries stop suppressing matches) without touching the
-    * corpus-sized tables; the next [[compactNearDupIndex]] reclaims
-    * the rows and clears the set. Held under the family's writer
-    * lease: a tombstone landing mid-compaction could otherwise be
-    * cleared without ever being applied (the rewrite's scan predates
-    * it — a lost deletion). Idempotent: ids are distinct-merged. The
-    * mutation is a crash-atomic [[Tombstones]] generation swap — a
-    * crash mid-write cannot lose the pending erasure set. */
+    * doc ids as tombstones ([[Tombstones.takedown]]). Effect is
+    * immediate at every probe (the entries stop suppressing matches)
+    * without touching the corpus-sized tables; the next
+    * [[compactNearDupIndex]] reclaims the rows and clears the set. */
   def tombstoneNearDup(spark: SparkSession, name: String,
-      ids: DataFrame): Unit = {
-    val lease = Generations.begin(spark, name, IndexMembers)
-    try Tombstones.add(spark, name, ids, "doc_id")
-    finally Generations.abort(spark, lease)
-  }
+      ids: DataFrame): Unit =
+    Tombstones.takedown(spark, name, IndexMembers, ids, "doc_id")
 
   /** [[incrementalNearDupSurvivors]] probing a PERSISTED index written
     * by [[writeNearDupIndex]] instead of re-deriving the history's
@@ -1245,7 +1178,7 @@ object Dedup {
     // reclaims their rows. Merged with the caller's excludeIds.
     val exCaller = excludeIds.map(ex =>
       ex.select(col(ex.columns.head).as("hid")))
-    val exTombs = nearDupTombstones(spark, name)
+    val exTombs = Tombstones.get(spark, name)
       .map(_.select(col("doc_id").as("hid")))
     val excl = (exCaller.toSeq ++ exTombs.toSeq).reduceOption(_ unionByName _)
     val cand1 = excl match {

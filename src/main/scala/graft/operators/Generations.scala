@@ -1,8 +1,10 @@
 package graft.operators
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
+import org.apache.spark.sql.functions.col
 
 /** Crash-atomic, reader-safe swaps for the maintained index families
   * ([[Dedup]] near-dup index, [[AnnIndex]]): GENERATION directories
@@ -415,6 +417,62 @@ object Generations {
       case e: Throwable => abort(spark, lease); throw e
     }
     commit(spark, lease, members, props, gcKeep)
+  }
+
+  /** An in-place mutation of the CURRENT generation under the family's
+    * writer lease: [[begin]], run `body`, then [[abort]] (release
+    * without a flip) whether or not it threw. Appends and takedowns
+    * hold the lease this way so a concurrent compaction or rebuild
+    * cannot publish a generation built from a scan that predates them;
+    * table names resolved inside `body` cannot name a just-retired
+    * generation. */
+  def leased[A](spark: SparkSession, name: String,
+      members: Seq[String])(body: => A): A = {
+    val lease = begin(spark, name, members)
+    try body finally abort(spark, lease)
+  }
+
+  /** The bucket spec of a bucketed member table, from the catalog —
+    * appends and compaction rewrites reuse the layout it was built
+    * with. */
+  def bucketSpecOf(spark: SparkSession, table: String): BucketSpec =
+    spark.sessionState.catalog.getTableMetadata(parse(spark, table))
+      .bucketSpec.getOrElse(sys.error(s"$table is not a bucketed index table"))
+
+  /** Append `df` to the bucketed member `table` under the table's own
+    * bucket and sort spec: every append lands bucket-aligned sorted
+    * files next to the existing ones, so bucketed scans stay
+    * exchange-free after it. */
+  def appendBucketed(df: DataFrame, table: String): Unit = {
+    val sp = bucketSpecOf(df.sparkSession, table)
+    val bc = sp.bucketColumnNames
+    val w = df.write.format("parquet").mode("append")
+      .bucketBy(sp.numBuckets, bc.head, bc.tail: _*)
+    (sp.sortColumnNames match {
+      case Nil => w
+      case s => w.sortBy(s.head, s.tail: _*)
+    }).saveAsTable(table)
+  }
+
+  /** A compaction's member rewrite: write `df` (the rows of bucketed
+    * member `old`, read through [[bucketedReads]]) as table `nt`,
+    * bucketed on `bcol` and sorted by `sortCols`. At the same bucket
+    * count and column the forced-bucketed scan owns one bucket per
+    * task, so the write is a narrow per-bucket file merge with no
+    * exchange. A resize (`numBuckets`) or a new bucket column pays one
+    * explicit hash exchange to the new layout, its task count pinned
+    * so AQE cannot coalesce it into one serial writer. */
+  def rewriteBucketed(df: DataFrame, old: String, nt: String, bcol: String,
+      sortCols: Seq[String], numBuckets: Option[Int]): Unit = {
+    val sp = bucketSpecOf(df.sparkSession, old)
+    val nb = numBuckets.getOrElse(sp.numBuckets)
+    require(nb > 0, s"numBuckets must be positive, got $nb")
+    val shaped =
+      if (nb == sp.numBuckets && sp.bucketColumnNames == Seq(bcol)) df
+      else df.repartition(nb, col(bcol))
+    shaped.write.format("parquet")
+      .bucketBy(nb, bcol).sortBy(sortCols.head, sortCols.tail: _*)
+      .saveAsTable(nt)
   }
 
   /** A clone of `spark` (same runtime confs) with bucketed scans

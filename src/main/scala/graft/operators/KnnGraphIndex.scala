@@ -111,13 +111,6 @@ object KnnGraphIndex {
     (p(KProp), p(NProbeProp), p(DimProp), p(BufProp))
   }
 
-  /** The table's bucket count — every graph member is bucketed. */
-  private def bucketCountOf(spark: SparkSession, table: String): Int =
-    spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(table))
-      .bucketSpec.getOrElse(sys.error(s"$table is not a bucketed index table"))
-      .numBuckets
-
   /** Exact chain-cosine edges for a (qid, vec_id) pair set, capped at
     * `cap` per qid — [[Similarity.exactReRank]] over a universe
     * carrying both endpoints' raw vectors. */
@@ -151,10 +144,6 @@ object KnnGraphIndex {
     val spark = emb.sparkSession
     import spark.implicits._
     VectorFunctions.register(spark)
-    // pinned pre-rebuild pending set — the only part the rebuild makes
-    // stale (see the clearApplied call at the end)
-    val stale0 = graphTombstones(spark, name)
-      .map(tt => Frontier.pin(tt.select(col("vec_id")).distinct()))
     val first = emb.select(size(col("embedding"))).take(1)
     require(first.nonEmpty, "cannot build a graph over an empty corpus")
     val dim = first(0).getInt(0)
@@ -183,7 +172,9 @@ object KnnGraphIndex {
       k + edgeBuffer + SelectBuffer).select("qid", "vec_id")
     val edges = exactEdges(emb.select(col("vec_id"), col("embedding")),
       pool, dim, k + edgeBuffer)
-    Generations.swap(spark, name, Members) { lease =>
+    // a rebuild redefines the contents: the pending set against the
+    // replaced generation is stale, not erased (Tombstones.rebuild)
+    Tombstones.rebuild(spark, name, Members, "vec_id") { lease =>
     // the four member writes and the drift gauge are independent jobs
     // inside the atomic swap — overlapped per guide §2.6 (Par doc)
     var baseDist = 0.0
@@ -217,11 +208,6 @@ object KnnGraphIndex {
       DimProp -> dim.toString, BufProp -> edgeBuffer.toString,
       BaseDistProp -> baseDist.toString)
     }
-    // subtract exactly the pre-rebuild pending set — a takedown that
-    // raced the flip targets the live graph and must stay pending
-    // (clearStale: no erased-registry claim, the rebuild redefines
-    // contents and the vecs may be present in the fresh build)
-    stale0.foreach(Tombstones.clearStale(spark, name, _))
   }
 
   /** The when-to-RETRAIN signal for the graph's frozen coarse
@@ -256,7 +242,8 @@ object KnnGraphIndex {
     else {
       val (k, nprobe, _, buf) = geometry(spark, name)
       val nCells = loadCentroids(spark, name).length
-      val nb = bucketCountOf(spark, t(spark, name, "edges"))
+      val nb = Generations.bucketSpecOf(spark, t(spark, name, "edges"))
+        .numBuckets
       writeKnnGraph(emb, name, k, nCells, nprobe, buf, nb)
       true
     }
@@ -295,7 +282,7 @@ object KnnGraphIndex {
     val et = asOf.fold(t(spark, name, "edges"))(g =>
       Generations.resolveAsOf(spark, name, "edges", g))
     val base = spark.table(et).filter(pred)
-    val live = graphTombstones(spark, name).fold(base) { tt =>
+    val live = Tombstones.get(spark, name).fold(base) { tt =>
       val ids = broadcast(tt.select(col("vec_id")).distinct())
       base.join(ids.withColumnRenamed("vec_id", "qid"), Seq("qid"),
           "left_anti")
@@ -437,10 +424,8 @@ object KnnGraphIndex {
     val vt = t(spark, name, "vecs")
     val pt = t(spark, name, "probes")
     val et = t(spark, name, "edges")
-    def appendTo(df: DataFrame, table: String, key: String): Unit = {
-      df.write.format("parquet").mode("append")
-        .bucketBy(bucketCountOf(spark, table), key).sortBy(key)
-        .saveAsTable(table)
+    def appendTo(df: DataFrame, table: String): Unit = {
+      Generations.appendBucketed(df, table)
       spark.catalog.refreshTable(table)
     }
     // edges and probes are mutually independent (disjoint tables, both
@@ -449,11 +434,11 @@ object KnnGraphIndex {
     Par.run(spark, Seq(
       () => appendTo(
         fenced(st.newEdges, spark.table(et), "qid", Seq("qid", "vec_id")),
-        et, "qid"),
+        et),
       () => appendTo(
         fenced(st.newProbes, spark.table(pt), "vec_id", Seq("vec_id")),
-        pt, "vec_id")))
-    appendTo(st.newVecs, vt, "vec_id")
+        pt)))
+    appendTo(st.newVecs, vt)
   }
 
   /** Append a batch of new vectors: the batch gains forward edges
@@ -466,10 +451,10 @@ object KnnGraphIndex {
       ifAbsent: Boolean = true): Unit = {
     val spark = batch.sparkSession
     VectorFunctions.register(spark)
-    val lease = Generations.begin(spark, name, Members)
-    try appendStages(spark, name, batch, ifAbsent)
-      .foreach(st => applyAppend(spark, name, st))
-    finally Generations.abort(spark, lease)
+    Generations.leased(spark, name, Members) {
+      appendStages(spark, name, batch, ifAbsent)
+        .foreach(st => applyAppend(spark, name, st))
+    }
   }
 
   /** Re-tighten the edge table to k + edgeBuffer rows per qid and make
@@ -491,14 +476,13 @@ object KnnGraphIndex {
       gcKeep: Int = 1, numBuckets: Option[Int] = None): Unit = {
     numBuckets.foreach(n =>
       require(n > 0, s"numBuckets must be positive, got $n"))
-    Tombstones.requireErasurePurges(spark, name, gcKeep)
     val (k, nprobe, dim, buf) = geometry(spark, name)
-    val nb = numBuckets.getOrElse(bucketCountOf(spark, t(spark, name, "edges")))
-    // pinned up front; the post-flip clear subtracts exactly this set
-    val applied0 = graphTombstones(spark, name)
-      .map(tt => Frontier.pin(tt.select(col("vec_id")).distinct()))
-    Generations.swap(spark, name, Members, gcKeep = gcKeep) { lease =>
-    val tombs = applied0.map(broadcast)
+    val nb = numBuckets.getOrElse(
+      Generations.bucketSpecOf(spark, t(spark, name, "edges")).numBuckets)
+    // tombstoned deletions become physical here (Tombstones.compaction)
+    Tombstones.compaction(spark, name, Members, "vec_id", gcKeep) {
+        (lease, applied) =>
+    val tombs = applied.map(broadcast)
     def minus(df: DataFrame) = tombs.fold(df)(ids =>
       df.join(ids, Seq("vec_id"), "left_anti"))
     val edges0 = spark.table(t(spark, name, "edges"))
@@ -541,26 +525,12 @@ object KnnGraphIndex {
       DimProp -> dim.toString, BufProp -> buf.toString,
       BaseDistProp -> baseDist)
     }
-    applied0.foreach(Tombstones.clearApplied(spark, name, _))
   }
 
-  /** Current tombstone set, if any deletions are pending reclamation
-    * (a crash-atomic [[Tombstones]] family — see its Scaladoc). */
-  def graphTombstones(spark: SparkSession,
-      name: String): Option[DataFrame] =
-    Tombstones.get(spark, name)
-
-  /** Record deletions (immediate logical effect at every probe via
-    * both-endpoint anti-joins; physical at the next compaction).
-    * Held under the writer lease like its [[AnnIndex.tombstoneAnn]] /
-    * [[Dedup.tombstoneNearDup]] twins; the mutation itself is a
-    * [[Tombstones]] generation swap, so a crash mid-write cannot lose
-    * the pending erasure set. */
+  /** Record deletions — the [[Tombstones.takedown]] contract (probes
+    * anti-join both endpoints; physical at the next compaction). */
   def tombstoneGraph(spark: SparkSession, name: String,
-      ids: DataFrame): Unit = {
-    val lease = Generations.begin(spark, name, Members)
-    try Tombstones.add(spark, name, ids, "vec_id")
-    finally Generations.abort(spark, lease)
-  }
+      ids: DataFrame): Unit =
+    Tombstones.takedown(spark, name, Members, ids, "vec_id")
 
 }

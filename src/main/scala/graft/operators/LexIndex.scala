@@ -294,34 +294,17 @@ object LexIndex {
   /** Test-only crash injection for the append's member-write window
     * (the [[Generations.failpoint]] pattern). The append's four member
     * writes run OVERLAPPED (see [[appendToLexIndex]]), so a crash can
-    * leave ANY SUBSET of {postings, doclen, vocab, impacts} landed —
-    * not just a prefix. The failpoint names the landed set and the
-    * append dies right after landing exactly it:
-    *  - the legacy prefix names (`after-postings`, `after-doclen`,
-    *    `after-vocab`, `after-impacts`) land their historical prefix
-    *    sets, so every pre-existing window keeps its exact wreckage;
-    *  - `land-only:<m>[,<m>...]` lands an arbitrary subset — the
-    *    states only reachable under overlap (e.g. doclen+impacts
-    *    without postings).
-    * Specs replay the batch from each wreckage and assert convergence. */
+    * leave ANY SUBSET of {postings, doclen, vocab, impacts} landed.
+    * `land-only:<m>[,<m>...]` names the landed set and the append dies
+    * right after landing exactly it — halting the JVM (exit 137) when
+    * [[Generations.failpointHalt]] is set, as a real crashed appender
+    * would, else throwing. Specs replay the batch from each wreckage
+    * and assert convergence. */
   @volatile private[graft] var appendFailpoint: Option[String] = None
 
-  /** Test-only: a triggered append failpoint HALTS the JVM (exit 137)
-    * instead of throwing — the [[Generations.failpointHalt]] pattern.
-    * A thrown exception still unwinds this JVM (the lease abort path
-    * runs); a real crashed appender does not — halt is the honest
-    * cross-process simulation DurableLab's kill matrix needs. */
-  @volatile private[graft] var appendFailpointHalt: Boolean = false
-
-  /** The landed set a failpoint names (None = no failpoint): legacy
-    * prefix names map to their historical sets, `land-only:` to an
-    * arbitrary subset. See [[appendFailpoint]]. */
+  /** The landed set the failpoint names (None = no failpoint). */
   private def failpointLandSet(): Option[Set[String]] =
     appendFailpoint.map {
-      case "after-postings" => Set("postings")
-      case "after-doclen" => Set("postings", "doclen")
-      case "after-vocab" => Set("postings", "doclen", "vocab")
-      case "after-impacts" => Set("postings", "doclen", "vocab", "impacts")
       case s if s.startsWith("land-only:") =>
         s.stripPrefix("land-only:").split(",").map(_.trim)
           .filter(_.nonEmpty).toSet
@@ -329,7 +312,7 @@ object LexIndex {
     }
 
   private def crashNow(landed: Set[String]): Nothing = {
-    if (appendFailpointHalt) Runtime.getRuntime.halt(137)
+    if (Generations.failpointHalt) Runtime.getRuntime.halt(137)
     throw new IllegalStateException(
       s"injected crash: landed only {${landed.toSeq.sorted.mkString(",")}}")
   }
@@ -487,11 +470,10 @@ object LexIndex {
   def writeLexIndex(docs: DataFrame, name: String, numBuckets: Int = 8,
       gcKeep: Int = 1): Unit = {
     val spark = docs.sparkSession
-    // pinned pre-rebuild pending set — the rebuild makes exactly IT
-    // stale; a takedown racing the flip survives the clearApplied
-    val stale0 = lexTombstones(spark, name)
-      .map(t => Frontier.pin(t.select(col("doc_id")).distinct()))
-    Generations.swap(spark, name, Members, gcKeep = gcKeep) { lease =>
+    // stale, not applied: the rebuild redefines contents from `docs`
+    // (previously tombstoned ids may be present again) — Tombstones
+    // .rebuild clears the captured set without claiming an erasure
+    Tombstones.rebuild(spark, name, Members, "doc_id", gcKeep) { lease =>
       val epoch = s"g${lease.gen}"
       val (tf, len) = termFrames(docs, numBuckets) // both pinned
       // pinned clustered+sorted on (tok, doc_id) — one exchange feeds
@@ -554,10 +536,6 @@ object LexIndex {
       }
       Map.empty
     }
-    // stale, not applied: the rebuild redefines contents from `docs`
-    // (previously tombstoned ids may be present again) — clear without
-    // claiming an erasure happened
-    stale0.foreach(Tombstones.clearStale(spark, name, _))
   }
 
   /** Append `batch` (doc_id, text) to the CURRENT generation in place,
@@ -577,21 +555,7 @@ object LexIndex {
   def appendToLexIndex(batch: DataFrame, name: String, batchId: String,
       ifAbsent: Boolean = false): Unit = {
     val spark = batch.sparkSession
-    val catalog = spark.sessionState.catalog
-    def spec(t: String) = catalog.getTableMetadata(parse(spark, t))
-      .bucketSpec.getOrElse(sys.error(s"$t is not a bucketed index table"))
-    def appendWith(df: DataFrame, t: String): Unit = {
-      val sp = spec(t)
-      val bc = sp.bucketColumnNames
-      val w = df.write.format("parquet").mode("append")
-        .bucketBy(sp.numBuckets, bc.head, bc.tail: _*)
-      (sp.sortColumnNames match {
-        case Nil => w
-        case s => w.sortBy(s.head, s.tail: _*)
-      }).saveAsTable(t)
-    }
-    val lease = Generations.begin(spark, name, Members)
-    try {
+    Generations.leased(spark, name, Members) {
       val (pt, lt, st) = (member(spark, name, "postings"),
         member(spark, name, "doclen"), member(spark, name, "stats"))
       val (vt, it) =
@@ -646,7 +610,7 @@ object LexIndex {
               .filter(col("owner").isNull || col("owner") === batchId)
               .select(batch.columns.map(col): _*), name, "doc_id")
           }
-        val nbP = spec(pt).numBuckets
+        val nbP = Generations.bucketSpecOf(spark, pt).numBuckets
         val (tf, len) = termFrames(admitted, nbP) // both pinned
         // pinned clustered+sorted on (tok, doc_id) like the build: the
         // postings/vocab/impacts writes below consume the one exchange
@@ -713,13 +677,15 @@ object LexIndex {
         val landSet = failpointLandSet()
         def gated(m: String, th: () => Unit): Option[() => Unit] =
           if (landSet.forall(_.contains(m))) Some(th) else None
+        def append(df: DataFrame, t: String): () => Unit =
+          () => Generations.appendBucketed(df, t)
         Par.run(spark, (Seq(
-          gated("postings", () => appendWith(postToAdd, pt)),
-          gated("doclen", () => appendWith(lenToAdd, lt))) ++
-          (if (!vocabDone) Seq(gated("vocab", () => appendWith(
+          gated("postings", append(postToAdd, pt)),
+          gated("doclen", append(lenToAdd, lt))) ++
+          (if (!vocabDone) Seq(gated("vocab", append(
             dictRows(post).withColumn("batch_id", lit(batchId)), vt)))
            else Nil) ++
-          (if (!impDone) Seq(gated("impacts", () => appendWith(
+          (if (!impDone) Seq(gated("impacts", append(
             impactRows(post, impactBlockRows(spark))
               .withColumn("batch_id", lit(batchId)), it)))
            else Nil)).flatten)
@@ -734,23 +700,15 @@ object LexIndex {
           .write.format("parquet").mode("append").saveAsTable(st)
         Seq(pt, lt, st, vt, it).foreach(spark.catalog.refreshTable)
       }
-    } finally Generations.abort(spark, lease)
+    }
   }
 
-  /** DELETE (takedown / right-to-erasure): record doc ids as
-    * tombstones under the writer lease. Immediate at every probe
-    * (tombstoned docs stop being retrievable); physical at the next
-    * [[compactLexIndex]]. Idempotent (distinct-merged). */
+  /** DELETE (takedown / right-to-erasure) — the [[Tombstones.takedown]]
+    * contract: tombstoned docs stop being retrievable at once, and are
+    * purged at the next [[compactLexIndex]]. */
   def tombstoneLex(spark: SparkSession, name: String,
-      ids: DataFrame): Unit = {
-    val lease = Generations.begin(spark, name, Members)
-    try Tombstones.add(spark, name, ids, "doc_id")
-    finally Generations.abort(spark, lease)
-  }
-
-  /** Pending deletions, or None. */
-  def lexTombstones(spark: SparkSession, name: String): Option[DataFrame] =
-    Tombstones.get(spark, name)
+      ids: DataFrame): Unit =
+    Tombstones.takedown(spark, name, Members, ids, "doc_id")
 
   /** COMPACTION: rewrite the family as the next generation — per-append
     * file accumulation collapses (forced bucketed scan → one task per
@@ -771,38 +729,21 @@ object LexIndex {
     * grown-corpus path). */
   def compactLexIndex(spark: SparkSession, name: String, gcKeep: Int = 1,
       numBuckets: Option[Int] = None): Unit = {
-    Tombstones.requireErasurePurges(spark, name, gcKeep)
-    val catalog = spark.sessionState.catalog
-    // captured PINNED up front: the post-flip clear subtracts exactly
-    // this set (Tombstones.clearApplied) — a takedown racing the
-    // capture or the flip stays pending for the next pass instead of
-    // being wiped unapplied
-    val applied0 = lexTombstones(spark, name)
-      .map(t => Frontier.pin(t.select(col("doc_id")).distinct()))
-    Generations.swap(spark, name, Members, gcKeep = gcKeep) { lease =>
+    // tombstoned docs' rows are purged here (Tombstones.compaction)
+    Tombstones.compaction(spark, name, Members, "doc_id", gcKeep) {
+        (lease, applied) =>
       // members of both generations read bucket by bucket
       val cs = Generations.bucketedReads(spark)
       val epoch = s"g${lease.gen}"
-      val tombs = applied0.map(broadcast)
+      val tombs = applied.map(broadcast)
       def purged(t: String): DataFrame =
         tombs.fold(cs.table(t))(tt =>
           cs.table(t).join(tt, Seq("doc_id"), "left_anti"))
       def rewrite(m: String, bcol: String, df: DataFrame,
-          sortCols: Seq[String]): String = {
-        val old = member(spark, name, m)
-        val sp = catalog.getTableMetadata(parse(spark, old)).bucketSpec
-          .getOrElse(sys.error(s"$old is not a bucketed index table"))
-        val nb = numBuckets.getOrElse(sp.numBuckets)
-        require(nb > 0, s"numBuckets must be positive, got $nb")
-        val nt = Generations.physical(name, m, lease.gen)
-        val shaped =
-          if (nb == sp.numBuckets && sp.bucketColumnNames == Seq(bcol)) df
-          else df.repartition(nb, col(bcol))
-        shaped.write.format("parquet")
-          .bucketBy(nb, bcol).sortBy(sortCols.head, sortCols.tail: _*)
-          .saveAsTable(nt)
-        nt
-      }
+          sortCols: Seq[String]): Unit =
+        Generations.rewriteBucketed(df, member(spark, name, m),
+          Generations.physical(name, m, lease.gen), bcol, sortCols,
+          numBuckets)
       val oldP = member(spark, name, "postings")
       requireTokenizer(spark, Seq(oldP))
       // Two waves of independent member writes (guide §2.6 / Par doc):
@@ -814,28 +755,24 @@ object LexIndex {
       val pt = Generations.physical(name, "postings", lease.gen)
       val lt = Generations.physical(name, "doclen", lease.gen)
       val vt = Generations.physical(name, "vocab", lease.gen)
-      val nbV = numBuckets.getOrElse(
-        catalog.getTableMetadata(parse(spark, oldP)).bucketSpec
-          .getOrElse(sys.error(s"$oldP is not a bucketed index table"))
-          .numBuckets)
+      // the family's bucket count after the rewrite (postings sets it)
+      val nb = numBuckets.getOrElse(
+        Generations.bucketSpecOf(spark, oldP).numBuckets)
       Par.run(spark, Seq(
-        () => require(rewrite("postings", "tok", purged(oldP),
-          Seq("tok", "doc_id")) == pt),
-        () => require(rewrite("doclen", "doc_id",
+        () => rewrite("postings", "tok", purged(oldP), Seq("tok", "doc_id")),
+        () => rewrite("doclen", "doc_id",
           purged(member(spark, name, "doclen"))
             .select(col("doc_id"), col("len"), lit(epoch).as("batch_id")),
-          Seq("doc_id")) == lt),
+          Seq("doc_id")),
         // the delta member resets to empty (schema from the old
         // postings — identical to the compacted table's)
         () => dictRows(purged(oldP).limit(0)).withColumn("batch_id", lit(""))
           .coalesce(1).write.format("parquet")
-          .bucketBy(nbV, "tok").sortBy("tok").saveAsTable(vt)))
+          .bucketBy(nb, "tok").sortBy("tok").saveAsTable(vt)))
       // df/stats rebuilt EXACTLY from the rows that survived — the
       // moment logical deletions become statistical deletions. The
       // dictionary consolidates with them: dfcap gets the exact
       // post-purge (df, max_tf, min_len) per term.
-      val nb = numBuckets.getOrElse(
-        catalog.getTableMetadata(parse(spark, pt)).bucketSpec.get.numBuckets)
       val dt = Generations.physical(name, "dfcap", lease.gen)
       // block stamps rebuilt exactly from the compacted postings
       val it = Generations.physical(name, "impacts", lease.gen)
@@ -864,7 +801,6 @@ object LexIndex {
       }
       Map.empty[String, String]
     }
-    applied0.foreach(Tombstones.clearApplied(spark, name, _))
   }
 
   /** PROBE: lexical top-`kEach` per query against the maintained index
@@ -1074,7 +1010,7 @@ object LexIndex {
     val byQid = qPairs.filter(p => ub.contains(p._2))
       .groupBy(_._1).map { case (q, ps) => q -> ps.map(_._2).toSeq }
     if (byQid.isEmpty) return emptyResult
-    val tomb = lexTombstones(spark, name)
+    val tomb = Tombstones.get(spark, name)
       .map(t => broadcast(t.select(col("doc_id")).distinct()))
     // the candidacy legs, normalized and PINNED once: θ-seeding,
     // candidacy and completion all gate on them, and a
@@ -1381,7 +1317,7 @@ object LexIndex {
     // physical and statistical at once (a candidacy-only exclusion is
     // internally consistent; a df that shrank while n_docs did not
     // would score with statistics no corpus ever had)
-    val cand0 = lexTombstones(spark, name).fold(rows)(t =>
+    val cand0 = Tombstones.get(spark, name).fold(rows)(t =>
       rows.join(broadcast(t.select(col("doc_id")).distinct()),
         Seq("doc_id"), "left_anti"))
     // serve-time scope: candidacy-only, like the tombstone exclusion
@@ -1506,7 +1442,7 @@ object LexIndex {
       }
     val rows = postings.select("tok", "doc_id", "positions")
       .join(broadcast(terms), "tok")
-    val cand = lexTombstones(spark, name).fold(rows)(t =>
+    val cand = Tombstones.get(spark, name).fold(rows)(t =>
       rows.join(broadcast(t.select(col("doc_id")).distinct()),
         Seq("doc_id"), "left_anti"))
     // negative anchors (a term occurring before its in-phrase offset
@@ -1582,7 +1518,7 @@ object LexIndex {
     requireTokenizer(spark, Seq(pt, st))
     val p0 = pairs.select(col(pairs.columns.head).cast("long").as("qid"),
       col(pairs.columns(1)).cast("long").as("doc_id")).distinct()
-    val p1 = lexTombstones(spark, name).fold(p0)(t =>
+    val p1 = Tombstones.get(spark, name).fold(p0)(t =>
       p0.join(broadcast(t.select(col("doc_id")).distinct()),
         Seq("doc_id"), "left_anti"))
     // pinned: the doc-id pushdown collect and the join must see one
@@ -1651,7 +1587,7 @@ object LexIndex {
     requireTokenizer(spark, Seq(pt, st))
     val p0 = pairs.select(col(pairs.columns.head).cast("long").as("qid"),
       col(pairs.columns(1)).cast("long").as("doc_id")).distinct()
-    val p1 = lexTombstones(spark, name).fold(p0)(t =>
+    val p1 = Tombstones.get(spark, name).fold(p0)(t =>
       p0.join(broadcast(t.select(col("doc_id")).distinct()),
         Seq("doc_id"), "left_anti"))
     val fg = Frontier.pin(p1)
@@ -1703,7 +1639,7 @@ object LexIndex {
         else postings0.filter(col("tok").isin(toks.map(x => x: Any): _*))
       }
     val rows = postings.select("tok", "doc_id").join(broadcast(qt), "tok")
-    val cand = lexTombstones(spark, name).fold(rows)(t =>
+    val cand = Tombstones.get(spark, name).fold(rows)(t =>
       rows.join(broadcast(t.select(col("doc_id")).distinct()),
         Seq("doc_id"), "left_anti"))
     cand.groupBy("qid", "doc_id")
@@ -1786,7 +1722,7 @@ object LexIndex {
       .withColumn("min_dist", expr(distSql))
       .filter(col("min_dist") <= slop)
       .select(col("qid"), col("doc_id"), col("min_dist"))
-    lexTombstones(spark, name).fold(hits)(t =>
+    Tombstones.get(spark, name).fold(hits)(t =>
       hits.join(broadcast(t.select(col("doc_id")).distinct()),
         Seq("doc_id"), "left_anti"))
   }
@@ -1849,7 +1785,7 @@ object LexIndex {
     val nq = qn.groupBy("qid").agg(countDistinct(col("off")).as("n"))
     val rows = postings.select(col("tok"), col("doc_id"), col("positions"))
       .join(broadcast(qn), "tok")
-    val cand = lexTombstones(spark, name).fold(rows)(t =>
+    val cand = Tombstones.get(spark, name).fold(rows)(t =>
       rows.join(broadcast(t.select(col("doc_id")).distinct()),
         Seq("doc_id"), "left_anti"))
     // one grouped row per (query, doc): the n clause position arrays,
@@ -1945,7 +1881,7 @@ object LexIndex {
       }
     val rows = postings.select("tok", "doc_id")
       .join(broadcast(expansions), "tok")
-    val cand = lexTombstones(spark, name).fold(rows)(t =>
+    val cand = Tombstones.get(spark, name).fold(rows)(t =>
       rows.join(broadcast(t.select(col("doc_id")).distinct()),
         Seq("doc_id"), "left_anti"))
     cand.groupBy("qid", "doc_id")

@@ -3,9 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The shared crash-atomic PENDING-DELETION store behind the three
-  * maintained indexes ([[Dedup]] near-dup, [[AnnIndex]],
-  * [[KnnGraphIndex]]): a one-member [[Generations]] family
+/** The shared crash-atomic PENDING-DELETION store behind the four
+  * maintained index families ([[Dedup]] near-dup, [[AnnIndex]],
+  * [[KnnGraphIndex]], [[LexIndex]]), and the erasure lifecycle they
+  * all follow: a one-member [[Generations]] family
   * `<index>_tombstones` whose `ids` table holds the ids deleted
   * logically but not yet physically reclaimed.
   *
@@ -27,6 +28,27 @@ import org.apache.spark.sql.functions._
   * ([[EmptyProp]], flipped in the SAME catalog call as the pointer),
   * so [[get]] answers "no pending deletions" from catalog metadata
   * alone — no per-probe data job.
+  *
+  * ==The envelope contract==
+  *
+  * An index family states only its members, its id column and its
+  * write body; the three envelopes below own the erasure policy:
+  *
+  *  - [[takedown]]: merge the ids into the pending set while holding
+  *    the INDEX family's writer lease, so a takedown cannot land
+  *    mid-compaction and be cleared without ever being applied.
+  *  - [[rebuild]]: capture the pending set (pinned) before the swap's
+  *    `begin`, swap, then [[clearStale]] exactly that capture — a
+  *    rebuild redefines the contents, so the old set is STALE, not
+  *    erased, and a takedown racing the flip stays pending.
+  *  - [[compaction]]: refuse `gcKeep > 1` while an erasure is pending
+  *    ([[requireErasurePurges]]), capture the pending set before
+  *    `begin`, hand it to the write body (which drops its rows), swap,
+  *    then [[clearApplied]] exactly that capture — recorded as erased,
+  *    a racing takedown left pending for the next pass.
+  *
+  * Probes and `ifAbsent` appends read the same store: probes anti-join
+  * [[get]], appends apply [[barReplayed]].
   *
   * The reference has no persisted deletion state (its dedup window is
   * in-process, `/root/reference/src/nats_client.py:246-260`); a
@@ -92,41 +114,116 @@ private[graft] object Tombstones {
     shaped.write.format("parquet").saveAsTable(table)
   }
 
-  /** Merge `ids` (first column, cast to long, named `idCol`) into the
-    * set — one generation swap, idempotent (distinct-merged). Callers
-    * hold their index family's writer lease around this (serializing
-    * against compaction); the tombstone family's own lease guards the
-    * swap itself. */
-  def add(spark: SparkSession, index: String, ids: DataFrame,
-      idCol: String): Unit = {
-    val fam = family(index)
+  /** Rewrite ids family `fam` as `next` of its current set (None when
+    * empty or absent) — one generation swap whose new set is computed
+    * UNDER the family's writer lease: two concurrent mutations then
+    * serialize cleanly, and neither can pin a set that predates the
+    * other's commit (a subtraction would silently wipe a takedown
+    * committed in between; a merge would re-add a subtracted id). The
+    * new set is pinned so its count and its write share one
+    * evaluation, and the count is stamped with the pointer. */
+  private def rewrite(spark: SparkSession, fam: String)(
+      next: Option[DataFrame] => DataFrame): Unit =
     Generations.swap(spark, fam, Members) { lease =>
-      // merged under the family's writer lease (the clearApplied
-      // discipline, applied symmetrically): a clearApplied committing
-      // between a pre-lease pin and this swap would otherwise see its
-      // subtraction re-added — benign (the re-added ids' rows are
-      // already purged) but a state no one should have to reason
-      // about. Under the lease the two mutations serialize cleanly.
-      val add = ids.select(col(ids.columns.head).cast("long").as(idCol))
-        .distinct()
-      // pinned: the count and the write share one evaluation
-      val merged = Frontier.pin(get(spark, index)
-        .fold(add)(cur => cur.unionByName(
-          add.select(col(add.columns.head).as(cur.columns.head)))
-          .distinct()))
-      val n = merged.count() // pinned: the count re-reads the checkpoint
-      writeIds(merged, n, Generations.physical(fam, "ids", lease.gen))
+      val set = Frontier.pin(next(idsOf(spark, fam)))
+      val n = set.count() // pinned: the count re-reads the checkpoint
+      writeIds(set, n, Generations.physical(fam, "ids", lease.gen))
       Map(EmptyProp -> (n == 0L).toString, PendingProp -> n.toString)
     }
+
+  /** Merge `ids` (first column, cast to long) into ids family `fam`,
+    * distinct — idempotent. A new set's column is `idCol`; an existing
+    * set keeps its own. */
+  private def merge(spark: SparkSession, fam: String, ids: DataFrame,
+      idCol: String): Unit = rewrite(spark, fam) { cur =>
+    val add = ids.select(col(ids.columns.head).cast("long").as(idCol))
+      .distinct()
+    cur.fold(add)(c =>
+      c.unionByName(add.select(col(idCol).as(c.columns.head))).distinct())
   }
 
-  /** Remove exactly the ids a compaction/rebuild APPLIED, leaving any
+  /** Remove `ids` (first column, cast to long) from ids family `fam`;
+    * a no-op when the family is empty or absent. */
+  private def subtract(spark: SparkSession, fam: String,
+      ids: DataFrame): Unit =
+    if (idsOf(spark, fam).isDefined) rewrite(spark, fam) {
+      case Some(cur) =>
+        val idCol = cur.columns.head
+        cur.join(ids.select(col(ids.columns.head).cast("long").as(idCol)),
+          Seq(idCol), "left_anti")
+      // emptied by a concurrent writer: the empty set takes its column
+      // from the caller's frame, never a hardcoded 'id' — the family
+      // carries the index's id column (doc_id/vec_id), and a direct
+      // reader of the empty set must see the same schema
+      case None => spark.range(0).select(lit(0L).as(ids.columns.head))
+    }
+
+  /** Merge `ids` (first column, cast to long, named `idCol`) into the
+    * pending set — idempotent. Callers hold their index family's
+    * writer lease around this ([[takedown]]), serializing it against
+    * compaction; the tombstone family's own lease guards the swap. */
+  def add(spark: SparkSession, index: String, ids: DataFrame,
+      idCol: String): Unit = merge(spark, family(index), ids, idCol)
+
+  // ------------------------------------------------------------------
+  // The lifecycle envelopes (see the object doc)
+  // ------------------------------------------------------------------
+
+  /** The pending set of `index` as distinct `idCol` values, pinned: the
+    * snapshot an envelope takes before its swap's `begin`. Pinned so it
+    * survives the tombstone family's own generation GC and is re-read
+    * by the write body and both clearing writes. */
+  private def capture(spark: SparkSession, index: String,
+      idCol: String): Option[DataFrame] =
+    get(spark, index).map(t => Frontier.pin(t.select(col(idCol)).distinct()))
+
+  /** DELETE from a maintained index family: record `ids` (first column)
+    * as pending tombstones, named `idCol`, under the family's writer
+    * lease. Immediate at every probe, physical at the family's next
+    * [[compaction]]; idempotent (distinct-merged); crash-atomic (a
+    * crash mid-write cannot lose the pending set). */
+  def takedown(spark: SparkSession, index: String, members: Seq[String],
+      ids: DataFrame, idCol: String): Unit =
+    Generations.leased(spark, index, members)(add(spark, index, ids, idCol))
+
+  /** A family REBUILD: `write` builds the next generation of `index`
+    * under [[Generations.swap]]; the pending set captured before it
+    * is stale afterwards and is cleared ([[clearStale]]) — only that
+    * capture, so a takedown racing the flip stays pending. */
+  def rebuild(spark: SparkSession, index: String, members: Seq[String],
+      idCol: String, gcKeep: Int = 1)(
+      write: Generations.Lease => Map[String, String]): Unit = {
+    val stale = capture(spark, index, idCol)
+    Generations.swap(spark, index, members, gcKeep)(write)
+    stale.foreach(clearStale(spark, index, _))
+  }
+
+  /** A family COMPACTION — where tombstoned deletions become physical.
+    * Refuses to retain history while an erasure is pending
+    * ([[requireErasurePurges]]), captures the pending set before the
+    * swap's `begin` and hands it to `write` (None when nothing is
+    * pending), which must drop those ids' rows from the next
+    * generation; after the flip exactly that capture is recorded as
+    * erased and cleared ([[clearApplied]]). A crash between flip and
+    * clear leaves no-op tombstones for the next pass (probes anti-join
+    * ids whose rows are gone), so the pair needs no atomicity. */
+  def compaction(spark: SparkSession, index: String, members: Seq[String],
+      idCol: String, gcKeep: Int)(
+      write: (Generations.Lease, Option[DataFrame]) => Map[String, String])
+      : Unit = {
+    requireErasurePurges(spark, index, gcKeep)
+    val applied = capture(spark, index, idCol)
+    Generations.swap(spark, index, members, gcKeep)(write(_, applied))
+    applied.foreach(clearApplied(spark, index, _))
+  }
+
+  /** Remove exactly the ids a compaction APPLIED, leaving any
     * tombstone that landed after the caller captured its snapshot
-    * pending for the next maintenance pass. [[clear]]'s whole-set
-    * reset is only safe while no other writer can mutate the set; the
-    * index writers release their lease at the generation flip, so a
-    * takedown arriving in the flip→clear window would be wiped
-    * UNAPPLIED by a blanket clear — a silently lost right-to-erasure.
+    * pending for the next maintenance pass. A whole-set reset would be
+    * safe only while no other writer can mutate the set; the index
+    * writers release their lease at the generation flip, so a takedown
+    * arriving in the flip→clear window would be wiped UNAPPLIED by a
+    * blanket clear — a silently lost right-to-erasure.
     * `applied` must be a PINNED frame (the capture survives the
     * tombstone family's own generation GC, and is re-read by both
     * writes below). Itself a swap; a crash before its flip leaves
@@ -135,8 +232,8 @@ private[graft] object Tombstones {
     *
     * Two r13-advice disciplines:
     *
-    *  - `remaining` is computed INSIDE the swap callback, under the
-    *    tombstone family's writer lease. The caller's index lease is
+    *  - the remaining set is computed INSIDE the swap callback
+    *    ([[rewrite]]), under the tombstone family's writer lease. The caller's index lease is
     *    already free here, so a concurrent takedown can commit a new
     *    id between entry and our swap; a pre-lease anti-join would pin
     *    a set that predates it and the flip would silently wipe that
@@ -168,53 +265,11 @@ private[graft] object Tombstones {
     * Only a compaction — which physically purges the pending rows —
     * may claim the erasure happened ([[clearApplied]]). Same
     * under-lease subtraction discipline. */
-  def clearStale(spark: SparkSession, index: String,
+  private def clearStale(spark: SparkSession, index: String,
       applied: DataFrame): Unit = {
     clearRaceHook.foreach(_.apply())
-    if (get(spark, index).isDefined) {
-      val fam = family(index)
-      Generations.swap(spark, fam, Members) { lease =>
-        val remaining = get(spark, index) match {
-          case Some(cur) =>
-            val idCol = cur.columns.head
-            Frontier.pin(cur.join(
-              applied.select(
-                col(applied.columns.head).cast("long").as(idCol)),
-              Seq(idCol), "left_anti"))
-          // column named from the caller's frame, not a hardcoded 'id':
-          // the family otherwise carries the index's id column
-          // (doc_id/vec_id), and a future direct reader of the empty
-          // set must see the same schema
-          case None =>
-            spark.range(0).select(lit(0L).as(applied.columns.head))
-        }
-        val n = remaining.count()
-        writeIds(remaining, n, Generations.physical(fam, "ids", lease.gen))
-        Map(EmptyProp -> (n == 0L).toString, PendingProp -> n.toString)
-      }
-    }
+    subtract(spark, family(index), applied)
   }
-
-  /** Reset to empty (after a compaction/rebuild applied the set) —
-    * itself a swap: a crash before the flip leaves the applied set in
-    * place, which is harmless (probes anti-join ids whose rows are
-    * already gone) and cleared by the next mutation. Callers that can
-    * race a concurrent takedown must use [[clearApplied]] instead.
-    * The whole set being cleared was applied (that is the contract),
-    * so it is recorded in the ERASED registry first — same ordering
-    * argument as [[clearApplied]]. */
-  def clear(spark: SparkSession, index: String): Unit =
-    get(spark, index).foreach { cur =>
-      registerErased(spark, index, Frontier.pin(cur))
-      val fam = family(index)
-      Generations.swap(spark, fam, Members) { lease =>
-        // empty set keeps the family's id column name (doc_id/vec_id)
-        spark.range(0).select(lit(0L).as(cur.columns.head)).coalesce(1)
-          .write.format("parquet")
-          .saveAsTable(Generations.physical(fam, "ids", lease.gen))
-        Map(EmptyProp -> "true", PendingProp -> "0")
-      }
-    }
 
   /** The erasure-debt gauge: how many ids await physical reclamation.
     * Catalog metadata only — every mutation stamps [[PendingProp]].
@@ -243,7 +298,7 @@ private[graft] object Tombstones {
     * resume retention on later swaps. Free on the default path (the
     * check runs only when `gcKeep > 1`), metadata-only when the
     * pending stamp exists. */
-  def requireErasurePurges(spark: SparkSession, index: String,
+  private def requireErasurePurges(spark: SparkSession, index: String,
       gcKeep: Int): Unit =
     if (gcKeep > 1) {
       val pending = pendingCount(spark, index)
@@ -302,20 +357,9 @@ private[graft] object Tombstones {
     * [[clearApplied]] discipline: two concurrent registrations must
     * both survive). Rewrite cost ∝ registry size — ids only, the
     * accepted takedown-registry footprint. */
-  def registerErased(spark: SparkSession, index: String,
-      ids: DataFrame): Unit = {
-    val fam = erasedFamily(index)
-    Generations.swap(spark, fam, Members) { lease =>
-      val add = ids.select(col(ids.columns.head).cast("long").as("doc_id"))
-        .distinct()
-      val merged = Frontier.pin(erasedSet(spark, index).fold(add)(cur =>
-        cur.unionByName(add.select(col(add.columns.head)
-          .as(cur.columns.head))).distinct()))
-      val n = merged.count()
-      writeIds(merged, n, Generations.physical(fam, "ids", lease.gen))
-      Map(EmptyProp -> (n == 0L).toString, PendingProp -> n.toString)
-    }
-  }
+  private def registerErased(spark: SparkSession, index: String,
+      ids: DataFrame): Unit =
+    merge(spark, erasedFamily(index), ids, "doc_id")
 
   /** Registry SIZE — [[pendingCount]]'s twin for the erased side,
     * catalog-metadata-only (every registry write stamps the count). */
@@ -327,27 +371,8 @@ private[graft] object Tombstones {
     * re-ingesting erased content requires (the nightly registry's
     * removeFromRegistry policy, at index level). Computed under the
     * registry's lease, same as [[registerErased]]. */
-  def readmit(spark: SparkSession, index: String, ids: DataFrame): Unit = {
-    val fam = erasedFamily(index)
-    if (erasedSet(spark, index).isDefined)
-      Generations.swap(spark, fam, Members) { lease =>
-        val remaining = erasedSet(spark, index) match {
-          case Some(cur) =>
-            val idCol = cur.columns.head
-            Frontier.pin(cur.join(
-              ids.select(col(ids.columns.head).cast("long").as(idCol)),
-              Seq(idCol), "left_anti"))
-          // same schema-consistency rule as clearStale's empty write:
-          // derive the column from the caller, never hardcode (vec-keyed
-          // families carry vec_id here)
-          case None =>
-            spark.range(0).select(lit(0L).as(ids.columns.head))
-        }
-        val n = remaining.count()
-        writeIds(remaining, n, Generations.physical(fam, "ids", lease.gen))
-        Map(EmptyProp -> (n == 0L).toString, PendingProp -> n.toString)
-      }
-  }
+  def readmit(spark: SparkSession, index: String, ids: DataFrame): Unit =
+    subtract(spark, erasedFamily(index), ids)
 
   /** The replay bar every `ifAbsent` append applies to its admitted
     * set: anti-join `batch` against the PENDING set (a takedown whose

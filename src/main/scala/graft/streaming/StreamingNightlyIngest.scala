@@ -34,7 +34,7 @@ import graft.operators.{AnnIndex, Dedup, Frontier, Generations, IndexMaintenance
   * index sides never re-shuffle (the d12/s09 layout contracts, held by
   * the same probe/append paths the standalone loops use), the budget
   * state is one row per stratum, and the shard append rewrites one
-  * boundary shard. `compactEvery` folds BOTH index compactions in —
+  * boundary shard. `compactEvery` folds every index compaction in —
   * each is a [[graft.operators.Generations]] pointer swap, safe
   * mid-stream because foreachBatch sequences batches strictly.
   *
@@ -186,20 +186,15 @@ object StreamingNightlyIngest extends org.apache.spark.internal.Logging {
       ids: DataFrame): Unit =
     deletedLog(spark, arts).foreach { cur =>
       val del = ids.select(col(ids.columns.head).cast("long").as("doc_id"))
-      val stillTombstoned =
-        Dedup.nearDupTombstones(spark, arts.ndIndex).exists(t =>
-          !t.join(del, Seq("doc_id"), "left_semi").isEmpty) ||
-        AnnIndex.annTombstones(spark, arts.annIndex).exists(t =>
-          !t.join(del.select(col("doc_id").as("vec_id")),
-            Seq("vec_id"), "left_semi").isEmpty) ||
-        (graphExists(spark, arts) &&
-          KnnGraphIndex.graphTombstones(spark, graphName(arts)).exists(t =>
-            !t.join(del.select(col("doc_id").as("vec_id")),
-              Seq("vec_id"), "left_semi").isEmpty))
+      val fams = families(spark, arts)
+      val stillTombstoned = fams.exists(f =>
+        Tombstones.get(spark, f.name).exists(t =>
+          !t.join(del.select(col("doc_id").as(f.idCol)), Seq(f.idCol),
+            "left_semi").isEmpty))
       require(!stillTombstoned,
-        "allowReingest before physical reclamation: compact both " +
-          "indexes first, or a re-ingested copy would be skipped by " +
-          "the ifAbsent appends and stay invisible to probes")
+        "allowReingest before physical reclamation: compact every " +
+          "maintained index first, or a re-ingested copy would be " +
+          "skipped by the ifAbsent appends and stay invisible to probes")
       // the raw-vector corpus reclaims at compactCorpus, not at the
       // index compactions: if the embedding is still physically in the
       // corpus table, un-barring the id would (a) re-expose the stale
@@ -218,10 +213,8 @@ object StreamingNightlyIngest extends org.apache.spark.internal.Logging {
       // bar: each index's ifAbsent appends anti-join them) must lift
       // together with the pipeline-level one, or the re-crawl this
       // method exists to allow would be silently skipped by every
-      // index append. readmit is a no-op on families with no registry
-      // (e.g. a loop that never ran the lex/graph legs).
-      Seq(arts.ndIndex, arts.annIndex, graphName(arts), lexName(arts))
-        .foreach(Tombstones.readmit(spark, _, del))
+      // index append. readmit is a no-op on families with no registry.
+      fams.foreach(f => Tombstones.readmit(spark, f.name, del))
     }
 
   /** PHYSICAL erasure for the raw-vector corpus table — the one
@@ -291,37 +284,64 @@ object StreamingNightlyIngest extends org.apache.spark.internal.Logging {
   private def lexExists(spark: SparkSession, arts: Artifacts): Boolean =
     Generations.currentGen(spark, lexName(arts)).isDefined
 
+  /** One maintained index family of a pipeline instance: its
+    * [[Generations]] name and members, the id column its tombstones
+    * carry, and its compaction body (taking `gcKeep`). */
+  private final case class Family(name: String, members: Seq[String],
+      idCol: String, compact: Int => Unit)
+
+  /** The pipeline's maintained index families — near-dup and ANN
+    * always, the graph and lexical ones when they exist. The one list
+    * takedowns, compactions, the maintenance sweep and re-admission
+    * all walk, so no step can skip a family another step maintains. */
+  private def families(spark: SparkSession, arts: Artifacts): Seq[Family] =
+    Seq(
+      Some(Family(arts.ndIndex, Dedup.maintenanceMembers, "doc_id",
+        k => Dedup.compactNearDupIndex(spark, arts.ndIndex, gcKeep = k))),
+      Some(Family(arts.annIndex, AnnIndex.maintenanceMembers, "vec_id",
+        k => AnnIndex.compactAnnIndex(spark, arts.annIndex, gcKeep = k))),
+      Option.when(graphExists(spark, arts))(
+        Family(graphName(arts), KnnGraphIndex.maintenanceMembers, "vec_id",
+          k => KnnGraphIndex.compactKnnGraph(spark, graphName(arts),
+            gcKeep = k))),
+      Option.when(lexExists(spark, arts))(
+        Family(lexName(arts), LexIndex.maintenanceMembers, "doc_id",
+          k => LexIndex.compactLexIndex(spark, lexName(arts), gcKeep = k)))
+    ).flatten
+
+  /** A family's compaction `gcKeep`: pending tombstones purge (1 — the
+    * erasure-vs-retention guard's choice, see [[start]]'s retention
+    * scaladoc); a clean family keeps `retainGenerations`. */
+  private def compactFamily(spark: SparkSession, f: Family,
+      retainGenerations: Int): Unit =
+    f.compact(if (Tombstones.pendingCount(spark, f.name) > 0) 1
+      else retainGenerations)
+
   /** Apply one night's takedown set to EVERY maintained artifact:
-    * tombstone both indexes (logical effect at the next probe,
-    * physical at their next compaction), append the ids to the durable
-    * registry, and physically remove their rows from the trainer shard
-    * layout (bounded rewrite of affected shard directories only —
-    * surviving offsets keep their holes). Budget already consumed by a
-    * deleted doc is NOT refunded: the per-stratum scan is a monotone
-    * prefix over history, and un-spending it would re-admit docs that
-    * were rejected because the deleted one was cheaper — history is
-    * append-only. Every effect here is idempotent, so a crashed
-    * night's replay converges. */
+    * tombstone every maintained index family (logical effect at the
+    * next probe, physical at its next compaction), append the ids to
+    * the durable registry, and physically remove their rows from the
+    * trainer shard layout (bounded rewrite of affected shard
+    * directories only — surviving offsets keep their holes). Budget
+    * already consumed by a deleted doc is NOT refunded: the
+    * per-stratum scan is a monotone prefix over history, and
+    * un-spending it would re-admit docs that were rejected because the
+    * deleted one was cheaper — history is append-only. Every effect
+    * here is idempotent, so a crashed night's replay converges. */
   def applyDeletions(arts: Artifacts, ids: DataFrame,
       assignSchema: org.apache.spark.sql.types.StructType): Unit = {
     val spark = ids.sparkSession
     val del = Frontier.pin(
       ids.select(col(ids.columns.head).cast("long").as("doc_id")).distinct())
     if (del.isEmpty) return
-    // six per-artifact effects of one takedown, all idempotent
+    // the per-artifact effects of one takedown, all idempotent
     // (distinct-merged tombstones, keyed registry union, keyed shard
     // delete) over the one pinned set — disjoint targets, overlapped
     // per guide §2.6 (Par doc); a crash mid-block replays to the same
-    // converged state whatever the interleaving, exactly as before
-    Par.run(spark, Seq(
-      () => Dedup.tombstoneNearDup(spark, arts.ndIndex, del),
-      () => AnnIndex.tombstoneAnn(spark, arts.annIndex,
-        del.select(col("doc_id").as("vec_id"))),
-      () => if (graphExists(spark, arts))
-        KnnGraphIndex.tombstoneGraph(spark, graphName(arts),
-          del.select(col("doc_id").as("vec_id"))),
-      () => if (lexExists(spark, arts))
-        LexIndex.tombstoneLex(spark, lexName(arts), del.select("doc_id")),
+    // converged state whatever the interleaving
+    Par.run(spark, families(spark, arts).map(f => () =>
+      Tombstones.takedown(spark, f.name, f.members,
+        del.select(col("doc_id").as(f.idCol)), f.idCol)) ++ Seq(
       () => writeRegistry(spark, arts, deletedLog(spark, arts)
         .fold(del.toDF())(cur => cur.unionByName(del).distinct())),
       () => Sharding.deleteFromShards(spark, arts.shardPath, del,
@@ -575,25 +595,12 @@ object StreamingNightlyIngest extends org.apache.spark.internal.Logging {
     * choice, see [[start]]'s retention scaladoc); clean families keep
     * `retainGenerations` as an as-of window. */
   def compactAll(spark: SparkSession, arts: Artifacts,
-      retainGenerations: Int = 1): Unit = {
-    def keepFor(index: String) =
-      if (Tombstones.pendingCount(spark, index) > 0) 1
-      else retainGenerations
+      retainGenerations: Int = 1): Unit =
     // per-family compactions touch disjoint families (their own swaps,
     // leases, tombstone sets) — overlapped per guide §2.6 (Par doc)
-    Par.run(spark, Seq(
-      () => Dedup.compactNearDupIndex(spark, arts.ndIndex,
-        gcKeep = keepFor(arts.ndIndex)),
-      () => AnnIndex.compactAnnIndex(spark, arts.annIndex,
-        gcKeep = keepFor(arts.annIndex)),
-      () => if (graphExists(spark, arts))
-        KnnGraphIndex.compactKnnGraph(spark, graphName(arts),
-          gcKeep = keepFor(graphName(arts))),
-      () => if (lexExists(spark, arts))
-        LexIndex.compactLexIndex(spark, lexName(arts),
-          gcKeep = keepFor(lexName(arts))),
-      () => compactCorpus(spark, arts)))
-  }
+    Par.run(spark, families(spark, arts).map(f => () =>
+      compactFamily(spark, f, retainGenerations)) :+
+      (() => compactCorpus(spark, arts)))
 
   /** POLICY-DRIVEN maintenance — [[compactAll]] with the WHEN decided
     * per family by [[IndexMaintenance]] instead of a fixed cadence:
@@ -620,33 +627,14 @@ object StreamingNightlyIngest extends org.apache.spark.internal.Logging {
       onDecision: (String, IndexMaintenance.FamilyHealth,
         IndexMaintenance.Decision) => Unit = logDecision)
       : Seq[(String, IndexMaintenance.Decision)] = {
-    def keepFor(index: String) =
-      if (Tombstones.pendingCount(spark, index) > 0) 1
-      else retainGenerations
-    val families: Seq[(String, Seq[String], () => Unit)] = Seq(
-      Some((arts.ndIndex, Dedup.maintenanceMembers, () =>
-        Dedup.compactNearDupIndex(spark, arts.ndIndex,
-          gcKeep = keepFor(arts.ndIndex)))),
-      Some((arts.annIndex, AnnIndex.maintenanceMembers, () =>
-        AnnIndex.compactAnnIndex(spark, arts.annIndex,
-          gcKeep = keepFor(arts.annIndex)))),
-      Option.when(graphExists(spark, arts))(
-        (graphName(arts), KnnGraphIndex.maintenanceMembers, () =>
-          KnnGraphIndex.compactKnnGraph(spark, graphName(arts),
-            gcKeep = keepFor(graphName(arts))))),
-      Option.when(lexExists(spark, arts))(
-        (lexName(arts), LexIndex.maintenanceMembers, () =>
-          LexIndex.compactLexIndex(spark, lexName(arts),
-            gcKeep = keepFor(lexName(arts))))),
-    ).flatten
     // decisions + logging stay sequential (metadata-only, ordered
     // audit trail); the due families' compaction bodies are per-family
     // independent and overlap (guide §2.6 / Par doc)
-    val decided = families.map { case (f, members, compact) =>
-      val h = IndexMaintenance.health(spark, f, members)
+    val decided = families(spark, arts).map { f =>
+      val h = IndexMaintenance.health(spark, f.name, f.members)
       val d = IndexMaintenance.compactionDue(h, policy)
-      onDecision(f, h, d)
-      (f, d, compact)
+      onDecision(f.name, h, d)
+      (f.name, d, () => compactFamily(spark, f, retainGenerations))
     }
     Par.run(spark,
       decided.collect { case (_, d, compact) if d.due => compact } ++
@@ -668,8 +656,8 @@ object StreamingNightlyIngest extends org.apache.spark.internal.Logging {
 
   /** Drive the composed loop from a streaming (doc_id, text, lang,
     * n_chars, embedding) frame. `sink(kept, batchId)` receives each
-    * night's admitted set. `compactEvery = n` compacts BOTH maintained
-    * indexes after every n-th batch (generation swaps — reader-safe
+    * night's admitted set. `compactEvery = n` compacts EVERY maintained
+    * index after every n-th batch (generation swaps — reader-safe
     * mid-stream). `driftCheckEvery = n` closes the ANN drift loop
     * in-stream: after every n-th batch, [[AnnIndex.driftRatio]] is
     * measured over the maintained raw-vector corpus and a retrain runs
@@ -682,8 +670,8 @@ object StreamingNightlyIngest extends org.apache.spark.internal.Logging {
     * deletions ride the same ordered stream as the data, so a
     * takedown can never be applied before the night that ingested the
     * doc. Without an `op` column every row ingests (unchanged). */
-  /** `retainGenerations = K ≥ 2` keeps an as-of window on the three
-    * index families at the compaction cadence ([[Generations
+  /** `retainGenerations = K ≥ 2` keeps an as-of window on the index
+    * families at the compaction cadence ([[Generations
     * .resolveAsOf]] — each retained generation is the index frozen as
     * of a past compaction night). Erasure composes by CHOICE, not by
     * error: a fold-in compaction that will apply pending tombstones

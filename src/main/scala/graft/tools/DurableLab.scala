@@ -104,7 +104,7 @@ object DurableLab {
   }
 
   private def tombSet(spark: SparkSession): Set[Long] =
-    Dedup.nearDupTombstones(spark, IndexName)
+    Tombstones.get(spark, IndexName)
       .fold(Set.empty[Long])(_.collect().map(_.getLong(0)).toSet)
 
   private def hashFile(workDir: String) =
@@ -210,7 +210,7 @@ object DurableLab {
         check(gens() == 2, s"expected old-gen debris, found ${gens()} gens")
         Dedup.compactNearDupIndex(spark, IndexName)
         check(gens() == 1, s"debris not GC'd: ${gens()} gens")
-        check(Dedup.nearDupTombstones(spark, IndexName).isEmpty,
+        check(Tombstones.get(spark, IndexName).isEmpty,
           "completed compaction did not clear the applied set")
         check(probeHash(spark) == stored, "probe hash after recovery compaction")
         inProcessMatrix(spark, stored)
@@ -359,8 +359,8 @@ object DurableLab {
 
       case "lex-kill-after-postings" =>
         Generations.leaseTtlOverrideMs = Some(ShortTtlMs)
-        LexIndex.appendFailpointHalt = true
-        LexIndex.appendFailpoint = Some("after-postings")
+        Generations.failpointHalt = true
+        LexIndex.appendFailpoint = Some("land-only:postings")
         LexIndex.appendToLexIndex(lexAppendBatch(spark), LexName,
           batchId = LexBatchId, ifAbsent = true)
         sys.error("unreachable: the append should have halted the JVM")
@@ -383,8 +383,8 @@ object DurableLab {
         // then kill the same append in its SECOND window
         LexIndex.writeLexIndex(docs(spark), LexName, numBuckets = 4)
         Generations.leaseTtlOverrideMs = Some(ShortTtlMs)
-        LexIndex.appendFailpointHalt = true
-        LexIndex.appendFailpoint = Some("after-doclen")
+        Generations.failpointHalt = true
+        LexIndex.appendFailpoint = Some("land-only:postings,doclen")
         LexIndex.appendToLexIndex(lexAppendBatch(spark), LexName,
           batchId = LexBatchId, ifAbsent = true)
         sys.error("unreachable: the append should have halted the JVM")
@@ -411,8 +411,8 @@ object DurableLab {
         // presence check) or the dictionary double-counts forever
         LexIndex.writeLexIndex(docs(spark), LexName, numBuckets = 4)
         Generations.leaseTtlOverrideMs = Some(ShortTtlMs)
-        LexIndex.appendFailpointHalt = true
-        LexIndex.appendFailpoint = Some("after-vocab")
+        Generations.failpointHalt = true
+        LexIndex.appendFailpoint = Some("land-only:postings,doclen,vocab")
         LexIndex.appendToLexIndex(lexAppendBatch(spark), LexName,
           batchId = LexBatchId, ifAbsent = true)
         sys.error("unreachable: the append should have halted the JVM")
@@ -439,7 +439,7 @@ object DurableLab {
         // exactly once while SKIPPING the already-landed deltas
         LexIndex.writeLexIndex(docs(spark), LexName, numBuckets = 4)
         Generations.leaseTtlOverrideMs = Some(ShortTtlMs)
-        LexIndex.appendFailpointHalt = true
+        Generations.failpointHalt = true
         LexIndex.appendFailpoint = Some("land-only:doclen,vocab,impacts")
         LexIndex.appendToLexIndex(lexAppendBatch(spark), LexName,
           batchId = LexBatchId, ifAbsent = true)
@@ -495,7 +495,7 @@ object DurableLab {
           "compacted dictionary != compacted postings")
         // clear() never ran: applied-but-uncleared tombstones are
         // harmless no-ops (the purged rows are gone)
-        check(LexIndex.lexTombstones(spark, LexName).isDefined,
+        check(Tombstones.get(spark, LexName).isDefined,
           "pending set vanished with the crash")
         def lexGens() = {
           val c = spark.sessionState.catalog
@@ -504,7 +504,7 @@ object DurableLab {
         check(lexGens() == 2, s"expected old-gen debris, got ${lexGens()}")
         LexIndex.compactLexIndex(spark, LexName)
         check(lexGens() == 1, s"lex debris not GC'd: ${lexGens()}")
-        check(LexIndex.lexTombstones(spark, LexName).isEmpty,
+        check(Tombstones.get(spark, LexName).isEmpty,
           "completed compaction did not clear the applied set")
         check(lexProbeHash(spark, LexName) == lexStored(workDir, "base"),
           "lex probe hash after recovery compaction")
@@ -1154,7 +1154,7 @@ object DurableLab {
     Generations.failpoint = None
     check(probeHash(spark) == stored, "probe hash across in-process matrix")
     Dedup.compactNearDupIndex(spark, IndexName)
-    check(Dedup.nearDupTombstones(spark, IndexName).isEmpty, "final clear")
+    check(Tombstones.get(spark, IndexName).isEmpty, "final clear")
     check(probeHash(spark) == stored, "final probe hash")
   }
 }

@@ -212,7 +212,7 @@ class KnnGraphIndexSpec extends SparkSpec {
       "within-margin deletion did not stay exact (buffer bound broken)")
     // physical reclamation: rows gone, set cleared, probe unchanged
     KnnGraphIndex.compactKnnGraph(spark, name)
-    assert(KnnGraphIndex.graphTombstones(spark, name).isEmpty)
+    assert(Tombstones.get(spark, name).isEmpty)
     assert(spark.table(Generations.resolve(spark, name, "vecs"))
       .filter(col("vec_id").isin(delIds: _*)).isEmpty)
     assert(probeSet(name) == got,

@@ -121,7 +121,8 @@ class LayoutStampSpec extends SparkSpec {
         },
         () => Tombstones.add(spark, tombIndex, Seq(3L).toDF("doc_id"),
           "doc_id"),
-        () => Tombstones.clear(spark, tombIndex),
+        () => Tombstones.get(spark, tombIndex).foreach(cur =>
+          Tombstones.clearApplied(spark, tombIndex, Frontier.pin(cur))),
         () => Tombstones.get(spark, tombIndex).foreach(_.collect())))
 
     def reset(): Unit = {

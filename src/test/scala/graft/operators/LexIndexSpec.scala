@@ -123,8 +123,11 @@ class LexIndexSpec extends SparkSpec {
   test("append replay converges across all partial-crash windows — " +
       "the four legacy prefixes AND the non-prefix subsets the " +
       "overlapped member writes make reachable") {
-    for (fp <- Seq("after-postings", "after-doclen", "after-vocab",
-        "after-impacts",
+    for (fp <- Seq(
+        // the four prefix windows of the old sequential member order
+        "land-only:postings", "land-only:postings,doclen",
+        "land-only:postings,doclen,vocab",
+        "land-only:postings,doclen,vocab,impacts",
         // subset states only reachable under overlap: a base member
         // missing while later-fenced members landed
         "land-only:doclen",
@@ -159,15 +162,17 @@ class LexIndexSpec extends SparkSpec {
         "postings")).count()
       assert(pc == pr, s"postings count diverged after $fp: $pc vs $pr")
       // the maintained dictionary converged too: delta written exactly
-      // once (the after-vocab window's replay must SKIP it; the earlier
-      // windows' replays must write it) — df would double otherwise
+      // once (a replay from a window that landed vocab must SKIP it;
+      // the other windows' replays must write it) — df would double
+      // otherwise
       assert(dictConsistent("graft_t_lexr"),
         s"dictionary diverged from postings after crash at $fp")
       // every landed row is covered by a dominating stamp on BOTH the
-      // clean and the replayed family — the after-postings window is
+      // clean and the replayed family — the postings-only window is
       // the one where rows land before their stamps; its replay must
-      // close the gap (and after-impacts' replay must not double-stamp
-      // in a way that stops dominating — superset stamps are fine)
+      // close the gap (and the all-four window's replay must not
+      // double-stamp in a way that stops dominating — superset stamps
+      // are fine)
       assert(stampsCover("graft_t_lexr"),
         s"a postings row lost stamp coverage after crash at $fp")
     }
@@ -247,7 +252,7 @@ class LexIndexSpec extends SparkSpec {
     LexIndex.appendToLexIndex(b, name, "bz", ifAbsent = true)
     LexIndex.tombstoneLex(spark, name, b.select("doc_id"))
     LexIndex.compactLexIndex(spark, name)
-    assert(LexIndex.lexTombstones(spark, name).isEmpty,
+    assert(Tombstones.get(spark, name).isEmpty,
       "compaction did not clear the applied set")
     def appended() = spark.table(Generations.resolve(spark, name, "doclen"))
       .filter(col("doc_id") >= 2000000L).count()

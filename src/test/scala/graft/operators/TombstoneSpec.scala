@@ -38,7 +38,7 @@ class TombstoneSpec extends SparkSpec {
       s"a copy of a RETAINED doc survived: $logical")
     // physical reclamation: compaction drops the rows and clears the set
     Dedup.compactNearDupIndex(spark, name)
-    assert(Dedup.nearDupTombstones(spark, name).isEmpty,
+    assert(Tombstones.get(spark, name).isEmpty,
       "compaction did not clear the tombstone set")
     val bt = Generations.resolve(spark, name, "buckets")
     val st = Generations.resolve(spark, name, "sigs")
@@ -50,11 +50,11 @@ class TombstoneSpec extends SparkSpec {
     // tombstoning is idempotent and mergeable
     Dedup.tombstoneNearDup(spark, name, Seq(10L, 11L).toDF("doc_id"))
     Dedup.tombstoneNearDup(spark, name, Seq(11L, 12L).toDF("doc_id"))
-    assert(Dedup.nearDupTombstones(spark, name).get.count() == 3L)
+    assert(Tombstones.get(spark, name).get.count() == 3L)
     // a rebuild clears stale tombstones: the fresh index's entries
     // must not be suppressed by deletions against the old one
     Dedup.writeNearDupIndex(docs, name, numBuckets = 4)
-    assert(Dedup.nearDupTombstones(spark, name).isEmpty)
+    assert(Tombstones.get(spark, name).isEmpty)
     assert(Dedup.incrementalNearDupSurvivorsIndexed(spark, name, copies)
       .isEmpty, "stale tombstones suppressed a rebuilt index")
   }
@@ -80,7 +80,7 @@ class TombstoneSpec extends SparkSpec {
     assert(logical != before)
     // physical reclamation via compaction; probe unchanged across it
     AnnIndex.compactAnnIndex(spark, name)
-    assert(AnnIndex.annTombstones(spark, name).isEmpty)
+    assert(Tombstones.get(spark, name).isEmpty)
     val ct = Generations.resolve(spark, name, "cells")
     assert(spark.table(ct)
       .filter(col("vec_id").isin(top1: _*)).count() == 0L)
@@ -90,7 +90,7 @@ class TombstoneSpec extends SparkSpec {
     AnnIndex.tombstoneAnn(spark, name, Seq(500L).toDF("vec_id"))
     AnnIndex.retrainAnnIndex(spark, name,
       emb.join(top1.toDF("vec_id"), Seq("vec_id"), "left_anti"))
-    assert(AnnIndex.annTombstones(spark, name).isEmpty,
+    assert(Tombstones.get(spark, name).isEmpty,
       "retrain did not clear stale tombstones")
   }
 
@@ -101,14 +101,14 @@ class TombstoneSpec extends SparkSpec {
   // mutate through the crash-atomic [[Tombstones]] generation swap;
   // this test kills the writer in BOTH crash windows and asserts the
   // erasure state is never lost, for the near-dup store (the ANN and
-  // graph stores are the same code path — Tombstones.add/clear).
+  // graph stores are the same code path — Tombstones.add/clearApplied).
   test("tombstone mutation is crash-atomic: prior erasure set survives a killed writer") {
     import spark.implicits._
     val docs = Tables(spark, sf, "documents")
       .select(col("doc_id"), col("text")).filter(col("doc_id") < 100)
     val name = "graft_tomb_crash"
     Dedup.writeNearDupIndex(docs, name, numBuckets = 4)
-    def set() = Dedup.nearDupTombstones(spark, name)
+    def set() = Tombstones.get(spark, name)
       .fold(Set.empty[Long])(_.collect().map(_.getLong(0)).toSet)
     Dedup.tombstoneNearDup(spark, name, Seq(1L, 2L).toDF("doc_id"))
     assert(set() == Set(1L, 2L))
@@ -136,11 +136,14 @@ class TombstoneSpec extends SparkSpec {
     // anti-joins of already-reclaimed ids), never a half state; the
     // compaction that follows clears it for real
     Generations.failpoint = Some("before-flip")
-    intercept[IllegalStateException] { Tombstones.clear(spark, name) }
+    intercept[IllegalStateException] {
+      Tombstones.get(spark, name).foreach(cur =>
+        Tombstones.clearApplied(spark, name, Frontier.pin(cur)))
+    }
     Generations.failpoint = None
     assert(set() == Set(1L, 2L, 3L, 4L))
     Dedup.compactNearDupIndex(spark, name)
-    assert(Dedup.nearDupTombstones(spark, name).isEmpty)
+    assert(Tombstones.get(spark, name).isEmpty)
     // the whole sequence left the index probeable
     assert(spark.table(Generations.resolve(spark, name, "buckets"))
       .filter(col("doc_id").isin(1L, 2L, 3L, 4L)).count() == 0L)
@@ -173,7 +176,8 @@ class TombstoneSpec extends SparkSpec {
       "an over-threshold pending set still wrote through a single task")
     assert(Tombstones.get(spark, name).get.count() == n)
     // the gauge is metadata-only and clears with the set
-    Tombstones.clear(spark, name)
+    Tombstones.get(spark, name).foreach(cur =>
+      Tombstones.clearApplied(spark, name, Frontier.pin(cur)))
     assert(Tombstones.pendingCount(spark, name) == 0L)
     assert(Tombstones.get(spark, name).isEmpty)
     Tombstones.destroy(spark, name)
@@ -242,12 +246,12 @@ class TombstoneSpec extends SparkSpec {
     // the compaction's captured snapshot: {3, 4}
     LexIndex.tombstoneLex(spark, name, Seq(3L, 4L).toDF("doc_id"))
     val captured = Frontier.pin(
-      LexIndex.lexTombstones(spark, name).get.select("doc_id"))
+      Tombstones.get(spark, name).get.select("doc_id"))
     // ...a takedown lands AFTER the capture (the flip->clear window)
     LexIndex.tombstoneLex(spark, name, Seq(5L).toDF("doc_id"))
     // the blanket clear would wipe 5 unapplied; clearApplied must not
     Tombstones.clearApplied(spark, name, captured)
-    val pending = LexIndex.lexTombstones(spark, name)
+    val pending = Tombstones.get(spark, name)
       .map(_.collect().map(_.getLong(0)).toSet).getOrElse(Set.empty)
     assert(pending == Set(5L),
       s"racing takedown lost or stale ids kept: $pending")
@@ -274,12 +278,12 @@ class TombstoneSpec extends SparkSpec {
     LexIndex.writeLexIndex(docs, name, numBuckets = 4)
     LexIndex.tombstoneLex(spark, name, Seq(3L, 4L).toDF("doc_id"))
     val captured = Frontier.pin(
-      LexIndex.lexTombstones(spark, name).get.select("doc_id"))
+      Tombstones.get(spark, name).get.select("doc_id"))
     Tombstones.clearRaceHook = Some(() =>
       LexIndex.tombstoneLex(spark, name, Seq(5L).toDF("doc_id")))
     try Tombstones.clearApplied(spark, name, captured)
     finally Tombstones.clearRaceHook = None
-    val pending = LexIndex.lexTombstones(spark, name)
+    val pending = Tombstones.get(spark, name)
       .map(_.collect().map(_.getLong(0)).toSet).getOrElse(Set.empty)
     assert(pending == Set(5L),
       s"takedown racing clearApplied's swap was lost: $pending")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.{IndexLayoutChecks, SparkSpec, Tables}
-import graft.operators.{AnnIndex, Dedup, Generations, Sharding}
+import graft.operators.{AnnIndex, Dedup, Generations, Sharding, Tombstones}
 
 /** The composed nightly-ingest loop's two contracts:
   *
@@ -299,8 +299,8 @@ class StreamingNightlyIngestSpec extends SparkSpec {
     assert(StreamingNightlyIngest.deletedIds(spark, arts)
       .collect().map(_.getLong(0)).toSet == deleted,
       "corpus compaction must keep the registry (the re-entry bar)")
-    assert(Dedup.nearDupTombstones(spark, arts.ndIndex).isEmpty)
-    assert(AnnIndex.annTombstones(spark, arts.annIndex).isEmpty)
+    assert(Tombstones.get(spark, arts.ndIndex).isEmpty)
+    assert(Tombstones.get(spark, arts.annIndex).isEmpty)
     assert(spark.table(Generations.resolve(spark, arts.ndIndex, "sigs"))
       .filter(col("doc_id").isin(deleted.toSeq: _*)).isEmpty)
     assert(spark.table(Generations.resolve(spark, arts.annIndex, "cells"))
@@ -382,7 +382,7 @@ class StreamingNightlyIngestSpec extends SparkSpec {
     graft.operators.Dedup.compactNearDupIndex(spark, arts.ndIndex)
     graft.operators.AnnIndex.compactAnnIndex(spark, arts.annIndex)
     KnnGraphIndex.compactKnnGraph(spark, gName)
-    assert(KnnGraphIndex.graphTombstones(spark, gName).isEmpty)
+    assert(Tombstones.get(spark, gName).isEmpty)
     assert(KnnGraphIndex.probeKnnGraph(spark, gName)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet == probed)
   }
@@ -430,7 +430,7 @@ class StreamingNightlyIngestSpec extends SparkSpec {
     // behavior-identical to a FRESH build over the surviving corpus —
     // the s33 contract through the composed loop
     StreamingNightlyIngest.compactAll(spark, arts)
-    assert(LexIndex.lexTombstones(spark, lexN).isEmpty)
+    assert(Tombstones.get(spark, lexN).isEmpty)
     val survivors = corpus.select(col("doc_id"), col("text"))
       .unionByName((b1.filter(_.doc_id != 1000000700L) ++ b2.take(1))
         .map(d => (d.doc_id, d.text)).toDF("doc_id", "text"))
@@ -650,7 +650,7 @@ class StreamingNightlyIngestSpec extends SparkSpec {
       assert(Generations.listGenerations(spark, arts.ndIndex, "sigs")
         .size == 1,
         "a takedown night's compaction must collapse the as-of window")
-      assert(Dedup.nearDupTombstones(spark, arts.ndIndex).isEmpty,
+      assert(Tombstones.get(spark, arts.ndIndex).isEmpty,
         "the purge compaction did not apply-and-clear the tombstone")
     } finally q.stop()
   }
@@ -915,5 +915,55 @@ class StreamingNightlyIngestSpec extends SparkSpec {
         s"$f: the in-loop sweep did not reclaim the takedown debt"))
     assert(!StreamingNightlyIngest.corpusErasureDue(spark, arts),
       "the in-loop sweep did not reclaim the corpus")
+  }
+
+  test("allowReingest refuses while the lexical family still holds the " +
+      "takedown; compacting it lifts the refusal and the doc re-enters") {
+    import graft.operators.LexIndex
+    val corpus = Tables(spark, sf, "documents")
+      .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
+      .filter(col("doc_id") < 40).localCheckpoint()
+    val arts = mkArts("relex")
+    reset(arts, corpus)
+    val lexN = StreamingNightlyIngest.lexName(arts)
+    Seq(arts.ndIndex, arts.annIndex, lexN).foreach(Tombstones.destroy(spark, _))
+    LexIndex.writeLexIndex(corpus.select(col("doc_id"), col("text")),
+      lexN, numBuckets = 4)
+    val victim = corpus.select("doc_id").orderBy("doc_id").head().getLong(0)
+    // night 0 ingests a fresh doc and takes the victim down everywhere
+    StreamingNightlyIngest.nightStep(arts,
+      Seq(NightDoc(1000000950L, "relex fixture doc with vocabulary omega " +
+          "psi chi phi upsilon tau sigma rho", "en", 70L)).toDF()
+        .withColumn("embedding", StreamingNightlyIngest.synthEmbedding),
+      budget = 100000L, salt = "relex", batchId = 0L,
+      deletes = Some(Seq(victim).toDF("doc_id")))
+    // every family but the lexical one reclaims the takedown
+    Dedup.compactNearDupIndex(spark, arts.ndIndex)
+    AnnIndex.compactAnnIndex(spark, arts.annIndex)
+    StreamingNightlyIngest.compactCorpus(spark, arts)
+    assert(Tombstones.pendingCount(spark, lexN) == 1L)
+    val e = intercept[IllegalArgumentException] {
+      StreamingNightlyIngest.allowReingest(spark, arts,
+        Seq(victim).toDF("doc_id"))
+    }
+    assert(e.getMessage.contains("physical reclamation"), e.getMessage)
+    assert(StreamingNightlyIngest.deletedIds(spark, arts)
+      .filter(col("doc_id") === victim).count() == 1L,
+      "a refused allowReingest un-barred the doc")
+    // the lexical compaction lifts the refusal
+    LexIndex.compactLexIndex(spark, lexN)
+    StreamingNightlyIngest.allowReingest(spark, arts,
+      Seq(victim).toDF("doc_id"))
+    assert(StreamingNightlyIngest.deletedIds(spark, arts)
+      .filter(col("doc_id") === victim).isEmpty)
+    // and the re-crawled doc lands in the lexical family again
+    StreamingNightlyIngest.nightStep(arts,
+      Seq(NightDoc(victim, "relex recrawl of the taken down doc with " +
+          "vocabulary kappa lambda mu nu xi omicron", "en", 70L)).toDF()
+        .withColumn("embedding", StreamingNightlyIngest.synthEmbedding),
+      budget = 100000L, salt = "relex", batchId = 1L)
+    assert(spark.table(Generations.resolve(spark, lexN, "doclen"))
+      .filter(col("doc_id") === victim).count() == 1L,
+      "the re-admitted doc did not re-enter the lexical index")
   }
 }

@@ -11,7 +11,11 @@ This is a dev tool only — the engine itself never depends on it.
 """
 import json
 import math
+import os
+import resource
+import shutil
 import sys
+import tempfile
 
 import duckdb
 import pandas as pd
@@ -50,10 +54,46 @@ def cmp_cell(a, b):
     return "diff"
 
 
+def mem_total_bytes() -> int:
+    with open("/proc/meminfo") as f:
+        return 1024 * next(int(l.split()[1]) for l in f
+                            if l.startswith("MemTotal:"))
+
+
+def host_limits(spill_dir: str) -> dict:
+    """DuckDB settings sized from the host: about half of MemTotal, one
+    thread per usable CPU, and a spill directory. Without them DuckDB
+    sizes itself from the whole machine and cannot spill."""
+    return {"memory_limit": f"{mem_total_bytes() // 2 // 2**20}MB",
+            "threads": len(os.sched_getaffinity(0)),
+            "temp_directory": spill_dir}
+
+
+def cap_address_space() -> None:
+    """Bound this process at 60% of MemTotal. DuckDB's memory_limit
+    does not cover every operator (s62's oracle grows past 15 GiB
+    under an 8 GiB limit), so without a hard cap one such query gets
+    the checker killed by the host and no summary line is printed;
+    with it the query fails with DuckDB's out-of-memory error, is
+    counted as a failure, and the run goes on."""
+    cap = mem_total_bytes() * 6 // 10
+    resource.setrlimit(resource.RLIMIT_AS, (cap, cap))
+
+
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3:])
-    con = duckdb.connect()
+    cap_address_space()
+    spill_dir = tempfile.mkdtemp(prefix="oracle-check-", dir="/tmp")
+    try:
+        fails = check(sf_dir, out_dir, only, spill_dir)
+    finally:
+        shutil.rmtree(spill_dir, ignore_errors=True)
+    sys.exit(1 if fails else 0)
+
+
+def check(sf_dir, out_dir, only, spill_dir):
+    con = duckdb.connect(config=host_limits(spill_dir))
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
@@ -108,7 +148,7 @@ def main():
             print(f"OK    {name}: {len(got)} rows exact"
                   + (f"  dtypes≠ {dt_mismatch}" if dt_mismatch else ""))
     print(f"\n{fails} failures / {len([n for n in oracles if not only or n in only])} oracled queries")
-    sys.exit(1 if fails else 0)
+    return fails
 
 
 if __name__ == "__main__":
