@@ -1,5 +1,9 @@
 package graft.sources
 
+import java.util.concurrent.atomic.LongAdder
+
+import scala.collection.mutable
+
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
@@ -19,9 +23,21 @@ import org.apache.spark.sql.types.StructType
   *    counted as published (:255-260)
   *  - retry ≤ max_retries with linear backoff RETRY_DELAY·attempt on
   *    publish timeout, then fail the task (→ Spark task retry → batch
-  *    replay, which the dedup window absorbs) (nats_client.py:242-281)
+  *    replay) (nats_client.py:242-281)
   *  - ack-stream verification: the PubAck must name the stream we
   *    published to (:254)
+  *
+  * The writer's sent-id window ([[SentIds]]) sits in front of the
+  * server's: before publishing a row with a `msg_id`, a writer reserves
+  * the id in its process's window for the output stream, and skips the
+  * row (counted in [[NatsCommit.duplicates]]) when the id is already
+  * reserved. A stateless stream (`StreamingEnrich.runNats`) relies on
+  * it: a redelivered post, or a second copy in the same batch, never
+  * reaches the server. A replayed batch or a retried task hits this
+  * window first — rows it already published are skipped, and the row
+  * whose publish failed was released, so it publishes once. Only a
+  * repeat across a process restart reaches the server, whose window
+  * stores it once and acks it as a duplicate, as in the reference.
   *
   * Input rows must carry `subject`, `value` and optionally `msg_id`
   * string columns (extra columns are ignored).
@@ -70,7 +86,7 @@ final class NatsStreamingWrite(options: Map[String, String], schema: StructType)
     logInfo(s"epoch $epochId: published=$pub duplicates=$dup")
   }
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    logWarning(s"epoch $epochId aborted; JetStream msg-id dedup absorbs any partial publishes")
+    logWarning(s"epoch $epochId aborted; the sent-id window skips its published rows on replay")
 }
 
 final class NatsBatchWrite(options: Map[String, String], schema: StructType)
@@ -93,18 +109,70 @@ final case class NatsWriterFactory(stream: String, subjectIdx: Int,
     new NatsDataWriter(this)
 }
 
+/** The msg-ids one process published to one output stream within the
+  * stream's duplicate window, oldest first, measured on the stream's
+  * clock. One window per stream handle: a dropped and re-created
+  * stream starts empty. */
+final class SentIds {
+  private val reservedAt = mutable.LinkedHashMap[String, Long]()
+  /** Rows skipped because their id was already reserved. */
+  val skipped = new LongAdder
+
+  /** Reserves `id` at `now`; false (and counted as skipped) when it is
+    * already reserved inside the window. Ids older than the window
+    * are evicted first. */
+  def reserve(id: String, now: Long, windowMs: Long): Boolean = synchronized {
+    while (reservedAt.nonEmpty && now - reservedAt.head._2 >= windowMs)
+      reservedAt.remove(reservedAt.head._1)
+    reservedAt.get(id) match {
+      case Some(at) if now - at < windowMs =>
+        skipped.increment()
+        false
+      case _ =>
+        reservedAt.remove(id) // re-inserted at the back: reservation order
+        reservedAt(id) = now
+        true
+    }
+  }
+
+  /** Drops a reservation whose publish failed, so a retry publishes. */
+  def release(id: String): Unit = synchronized { reservedAt.remove(id); () }
+}
+
+object SentIds {
+  // keyed by handle identity; weak, so a dropped stream's window goes
+  // with it
+  private val windows = new java.util.WeakHashMap[StubStream, SentIds]()
+  def of(stream: StubStream): SentIds =
+    windows.synchronized(windows.computeIfAbsent(stream, _ => new SentIds))
+}
+
 final class NatsDataWriter(f: NatsWriterFactory)
     extends DataWriter[InternalRow] with Logging {
   private var published = 0L
   private var duplicates = 0L
-  private def target: StubStream = StubJetStream.info(f.stream)
+  private lazy val target: StubStream = StubJetStream.info(f.stream)
     .getOrElse(throw new IllegalStateException(s"stream ${f.stream} vanished"))
+  private lazy val sent = SentIds.of(target)
 
   override def write(row: InternalRow): Unit = {
     val subject = row.getUTF8String(f.subjectIdx).toString
     val value = row.getUTF8String(f.valueIdx).toString
     val msgId = if (f.msgIdIdx >= 0 && !row.isNullAt(f.msgIdIdx))
       row.getUTF8String(f.msgIdIdx).toString else null
+    if (msgId != null &&
+        !sent.reserve(msgId, target.clock(), target.duplicateWindowMs)) {
+      duplicates += 1 // published by an earlier row, batch or attempt
+      return
+    }
+    try publish(subject, value, msgId)
+    catch { case e: Throwable =>
+      if (msgId != null) sent.release(msgId)
+      throw e
+    }
+  }
+
+  private def publish(subject: String, value: String, msgId: String): Unit = {
     var attempt = 0
     var done = false
     while (!done) {

@@ -62,12 +62,15 @@ final class NatsTable(options: Map[String, String])
   override def name(): String = s"stub-nats:$streamName"
 
   /** A1/A4 as sink metrics in StreamingQueryProgress.sink.metrics:
-    * cumulative publish totals, duplicate detections (still counted as
-    * published, nats_client.py:255-260), publish timeouts. */
+    * cumulative publish totals, server duplicate detections (still
+    * counted as published, nats_client.py:255-260), publish timeouts,
+    * and the redeliveries the writer's sent-id window skipped before
+    * they reached the server. */
   override def metrics(): java.util.Map[String, String] =
     StubJetStream.info(streamName).map { s =>
       Map("publishedRows" -> s.publishedTotal.sum.toString,
         "duplicateRows" -> s.duplicateTotal.sum.toString,
+        "skippedDuplicateRows" -> SentIds.of(s).skipped.sum.toString,
         "publishTimeouts" -> s.timeoutTotal.sum.toString).asJava
     }.getOrElse(java.util.Collections.emptyMap[String, String]())
   override def schema(): StructType = NatsTable.ReadSchema
@@ -91,6 +94,15 @@ final class NatsTable(options: Map[String, String])
 /** Offset = JetStream stream sequence number (monotone, replayable). */
 final case class NatsOffset(seq: Long) extends Offset {
   override def json(): String = seq.toString
+}
+
+object NatsOffset {
+  /** The sequence of an offset Spark hands back: a restarted query
+    * passes the offset log's entries as serialized offsets. */
+  def seq(o: Offset): Long = o match {
+    case NatsOffset(s) => s
+    case other => other.json().toLong
+  }
 }
 
 /** One seq-range split; `queue-group load balancing across replicas`
@@ -141,7 +153,7 @@ final class NatsMicroBatchStream(options: Map[String, String])
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val last = availableNowEnd.getOrElse(stream.lastSeq)
-    val from = start.asInstanceOf[NatsOffset].seq
+    val from = NatsOffset.seq(start)
     val capped = limit match {
       case rows: org.apache.spark.sql.connector.read.streaming.ReadMaxRows =>
         math.min(last, from + rows.maxRows())
@@ -153,8 +165,8 @@ final class NatsMicroBatchStream(options: Map[String, String])
   override def reportLatestOffset(): Offset = NatsOffset(stream.lastSeq)
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[NatsOffset].seq
-    val e = end.asInstanceOf[NatsOffset].seq
+    val s = NatsOffset.seq(start)
+    val e = NatsOffset.seq(end)
     val total = e - s
     if (total <= 0) Array.empty
     else {
@@ -177,7 +189,7 @@ final class NatsMicroBatchStream(options: Map[String, String])
     * (nats_client.py:212-213): only after the micro-batch fully
     * succeeds, so failures redeliver (at-least-once, T1). */
   override def commit(end: Offset): Unit =
-    stream.consumer(consumerName).ack(end.asInstanceOf[NatsOffset].seq)
+    stream.consumer(consumerName).ack(NatsOffset.seq(end))
 
   override def deserializeOffset(json: String): Offset = NatsOffset(json.toLong)
   override def stop(): Unit = ()
@@ -187,7 +199,7 @@ final class NatsMicroBatchStream(options: Map[String, String])
     * (reference HPA targets 500 pending/pod). */
   override def metrics(latestConsumedOffset: Optional[Offset]): java.util.Map[String, String] = {
     val committed = Option(latestConsumedOffset.orElse(null))
-      .map(_.asInstanceOf[NatsOffset].seq)
+      .map(NatsOffset.seq)
       .getOrElse(stream.consumer(consumerName).committed)
     Map("numPending" -> math.max(0L, stream.lastSeq - committed).toString,
       "lastSeq" -> stream.lastSeq.toString).asJava

@@ -11,9 +11,14 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulPro
   * (reference `/root/reference/src/nats_client.py:99`: server-side
   * msg-id dedup absorbs publish retries).
   *
-  * The production pipeline keeps this responsibility in the sink (the
-  * server enforces it, where the reference puts it — see NatsSink); this
-  * operator is for deployments whose sink has no native dedup window.
+  * The production stream (`StreamingEnrich.runNats`) keeps no dedup
+  * state: its sink drops repeats by `Nats-Msg-Id = uri:cid` in two
+  * windows that both span the output stream's duplicate window (see
+  * NatsSink). The writer's per-process sent-id window
+  * (`graft.sources.SentIds`) skips a redelivery, an in-batch copy or a
+  * replayed row before it is published; the server's window stores a
+  * repeat that crosses a process restart once, where the reference puts
+  * it. This operator is for deployments whose sink has no such window.
   *
   * Time model: EVENT time with explicit per-key timers, not
   * processing-time TTL. Two reasons. (1) Determinism: replaying the

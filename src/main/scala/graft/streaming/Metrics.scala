@@ -62,10 +62,12 @@ final class MetricsListener extends StreamingQueryListener {
     // A4 taxonomy + published totals from the sink's ReportsSinkMetrics
     // (cumulative → gauges). publish_failed surfaces as a task/query
     // failure, matching the reference, which raises after exhausting
-    // retries.
+    // retries. Redeliveries the writer's sent-id window skipped never
+    // reach the server, so they count apart from its duplicate acks.
     Option(p.sink.metrics).foreach { m =>
       Option(m.get("publishedRows")).foreach(v => gauges.put("posts_published_total", v.toLong))
       Option(m.get("duplicateRows")).foreach(v => gauges.put("publish_duplicates_total", v.toLong))
+      Option(m.get("skippedDuplicateRows")).foreach(v => gauges.put("publish_duplicates_skipped_total", v.toLong))
       Option(m.get("publishTimeouts")).foreach(v => gauges.put("errors_publish_timeout_total", v.toLong))
     }
   }

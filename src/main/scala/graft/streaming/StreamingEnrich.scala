@@ -19,11 +19,27 @@ import graft.pipeline.Enrich
   * task scheduling).
   *
   * Delivery semantics (§2.5): checkpointed offsets give at-least-once
-  * replay (T1); `dropDuplicatesWithinWatermark` on (uri, cid) inside
-  * the watermark mirrors JetStream's 600s `Nats-Msg-Id` dedup window
-  * (T2/S6), making the sink effectively-once; malformed JSON lands in
-  * `_corrupt`, is counted via `observe`, and never fails the stream
-  * (T8 poison pills).
+  * replay (T1). [[runNats]] keeps no dedup state: each micro-batch is
+  * stateless and publishes with `Nats-Msg-Id = uri:cid`, where the
+  * sink writer's sent-id window (one per output stream, spanning the
+  * stream's 600 s `duplicate_window`) skips an id it already published
+  * and the JetStream window stores a cross-restart repeat once (T2/S6,
+  * nats_client.py:99,246-260), as in the reference. [[pipeline]] keeps
+  * `dropDuplicatesWithinWatermark` on (uri, cid) for sinks without such
+  * a window ([[runParquet]]). Malformed JSON lands in `_corrupt`, is
+  * counted via `observe`, and never fails the stream (T8 poison pills).
+  *
+  * Trigger: [[runNats]] starts micro-batches on a fixed
+  * [[BatchInterval]] grid (250 ms, four per second), and a batch that
+  * overruns its slot is followed at once. A post waits for the next
+  * slot, not for a 1 s tick; a backlog drains one `maxAckPending` batch
+  * per slot, so its drain time is set by the grid and the last batch,
+  * not by the sum of every batch's fork-bound checkpoint writes (with
+  * `ProcessingTime(0)` a 500-post burst drained in 0.8-1.7 s from run
+  * to run). A batch is one stage and compiles no new code:
+  * `processed_at` is a per-row wall clock, not `current_timestamp()`,
+  * whose per-epoch literal made whole-stage codegen compile fresh code
+  * every batch.
   *
   * Enrichment path: every entry point here ([[pipeline]], [[runNats]],
   * [[runParquet]], and `AuthorStats` over [[enrich]]) classifies a post
@@ -53,6 +69,19 @@ object StreamingEnrich {
 
   val DedupWindow = "600 seconds" // reference duplicate_window (config.py:27)
   val Processor = "graft-spark"
+
+  /** [[runNats]]'s default micro-batch grid. Longer than a 100-row
+    * batch takes on 4 cores (~150-200 ms), so batches keep the grid;
+    * a divisor of 1 s, so every whole second is a slot boundary. */
+  val BatchInterval: Trigger = Trigger.ProcessingTime(250L)
+
+  /** Epoch seconds read per row when the row is processed, as the
+    * reference stamps `processed_at` (`time.time()`, nats_client.py:231).
+    * Nondeterministic, so never folded: `current_timestamp()` becomes a
+    * new literal in every epoch, and the generated code with it. */
+  private val wallClock =
+    udf(() => System.currentTimeMillis() / 1000.0)
+      .asNondeterministic().asNonNullable().withName("wall_clock")
 
   /** Parse a (value: string) stream; malformed JSON → `_corrupt`. */
   def parse(raw: DataFrame, valueCol: String = "value"): DataFrame =
@@ -92,8 +121,7 @@ object StreamingEnrich {
         col("topics").as("topics"),
         col("top_topic").as("top_topic"),
         col("top_confidence").as("top_confidence")))
-      .withColumn("processed_at",
-        unix_timestamp(current_timestamp()).cast("double"))
+      .withColumn("processed_at", wallClock())
       .withColumn("processor", lit(Processor))
   }
 
@@ -137,18 +165,20 @@ object StreamingEnrich {
         .as("value"),
       concat_ws(":", col("uri"), col("cid")).as("msg_id"))
 
-  /** Production entry point: parse → enrich → dedup → publish to the
+  /** Production entry point: parse → enrich → publish to the
     * JetStream-shaped sink (NatsWriteBuilder) with per-row subject
     * routing, retry/backoff and the msg-id dedup window — the full
-    * reference loop (service.py main loop + nats_client publish). The
+    * reference loop (service.py main loop + nats_client publish). Each
+    * micro-batch is stateless and starts on the [[BatchInterval]] grid;
+    * the sink's msg-id window, not a state store, drops repeats. The
     * `format` is the connector's DataSourceRegister short name:
     * "stub-nats" here, a real client-backed provider under the same
     * contract in a deployment with the NATS jar. */
   def runNats(spark: SparkSession, raw: DataFrame, checkpointDir: String,
       outStream: String,
-      trigger: Trigger = Trigger.ProcessingTime("1 second"),
+      trigger: Trigger = BatchInterval,
       format: String = "stub-nats"): StreamingQuery =
-    wireFormat(pipeline(raw)).writeStream
+    wireFormat(enrich(parse(raw))).writeStream
       .format(format)
       .option("stream", outStream)
       .option("checkpointLocation", checkpointDir)

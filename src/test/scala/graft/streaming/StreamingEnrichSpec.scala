@@ -5,6 +5,9 @@ import java.nio.file.Files
 import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
+
 import graft.SparkSpec
 import graft.pipeline.{Enrich, StandIn}
 
@@ -123,8 +126,9 @@ class StreamingEnrichSpec extends SparkSpec {
     q.awaitTermination(60000)
     val stream = StubJetStream.info("enriched-out").get
     val msgs = stream.allMessages
-    // dup deduped upstream (watermark window), poison dropped → 1 msg
+    // dup skipped by the writer's sent-id window, poison dropped → 1 msg
     assert(msgs.map(_.msgId) == Seq("at://1:c1"), msgs.mkString(","))
+    assert(stream.duplicateTotal.sum == 0L)
     assert(msgs.head.subject.startsWith("bluesky.enriched."), msgs.head.subject)
     assert(msgs.head.data.contains("\"uri\":\"at://1\""), msgs.head.data)
     assert(msgs.head.data.contains("\"processor\":\"graft-spark\""))
@@ -137,6 +141,112 @@ class StreamingEnrichSpec extends SparkSpec {
       org.apache.spark.sql.streaming.Trigger.AvailableNow())
     q2.awaitTermination(60000)
     assert(StubJetStream.info("enriched-out").get.allMessages.size == 1)
+  }
+
+  /** A stub-nats input stream `name-posts` read through two seq-range
+    * partitions, and a fresh output stream `name-enriched` with a 60 s
+    * duplicate window. */
+  private def natsStreams(name: String) = {
+    import graft.sources.StubJetStream
+    Seq(s"$name-posts", s"$name-enriched").foreach(StubJetStream.drop)
+    val in = StubJetStream.ensure(s"$name-posts", Seq("bluesky.posts.>"))
+    val out = StubJetStream.ensure(s"$name-enriched",
+      Seq("bluesky.enriched.>"), duplicateWindowMs = 60000L)
+    val raw = spark.readStream.format("stub-nats")
+      .option("stream", s"$name-posts").option("subject", "bluesky.posts.>")
+      .option("numPartitions", "2").load()
+    (in, out, raw)
+  }
+
+  test("runNats: the writer's sent-id window publishes each post once") {
+    import graft.sources.{SentIds, StubJetStream}
+    val (in, out, raw) = natsStreams("window")
+    var now = 1000000L
+    out.clock = () => now
+    def pub(i: Int): Unit = in.publish("bluesky.posts.x",
+      post(s"at://w$i", s"wc$i", "m m m museum join join join join stream"), null)
+    def published(i: Int): Int = out.allMessages.count(_.msgId == s"at://w$i:wc$i")
+    val ckpt = Files.createTempDirectory("senrich_window_ckpt").toString
+    val listener = new MetricsListener
+    spark.streams.addListener(listener)
+    try {
+      // one batch of six rows over two seq-range partitions, (0,3] and
+      // (3,6]: post 1's copies at seq 1 and seq 6 are written by two
+      // different tasks
+      pub(1); (2 to 5).foreach(pub); pub(1)
+      var q = StreamingEnrich.runNats(spark, raw, ckpt, "window-enriched")
+      q.processAllAvailable()
+      assert(q.recentProgress.map(_.numInputRows).filter(_ > 0).toSeq == Seq(6L))
+      assert((1 to 5).map(published) == Seq.fill(5)(1))
+      assert(out.duplicateTotal.sum == 0L)
+      // a later batch's copy of post 2 is skipped too
+      pub(2); q.processAllAvailable()
+      assert(published(2) == 1 && out.allMessages.size == 5)
+      assert(SentIds.of(out).skipped.sum == 2L)
+      // past the window the id is free again, at the writer and server
+      now += 60000L
+      pub(3); q.processAllAvailable()
+      assert(published(3) == 2)
+      // publish fails past maxRetries (3): the writer releases post 7's
+      // reservation and the task fails the batch; the restarted query
+      // replays the batch and publishes post 7 exactly once
+      out.failNextPublishes = 4
+      pub(7)
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q.processAllAvailable()
+      }
+      assert(published(7) == 0)
+      q = StreamingEnrich.runNats(spark, raw, ckpt, "window-enriched")
+      q.processAllAvailable()
+      q.stop()
+      assert(published(7) == 1)
+      assert(out.timeoutTotal.sum == 4L)
+      // no repeat ever reached the server; the skips surface as metrics
+      assert(out.duplicateTotal.sum == 0L)
+      assert(q.lastProgress.sink.metrics.get("skippedDuplicateRows") == "2")
+      eventually(timeout(Span(10, Seconds))) {
+        assert(listener.gauge("publish_duplicates_skipped_total") == 2L)
+      }
+    } finally {
+      spark.streams.removeListener(listener)
+      spark.streams.active.foreach(_.stop())
+      StubJetStream.drop("window-posts")
+      StubJetStream.drop("window-enriched")
+    }
+  }
+
+  test("runNats: one stage, no state, and later epochs compile no code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.streaming.operators.stateful.StateStoreWriter
+    import graft.sources.StubJetStream
+    val (in, _, raw) = natsStreams("epochs")
+    val q = StreamingEnrich.runNats(spark, raw,
+      Files.createTempDirectory("senrich_epochs_ckpt").toString,
+      "epochs-enriched")
+    def epoch(i: Int): Unit = {
+      (0 until 1 + i % 3).foreach(j => in.publish("bluesky.posts.x",
+        post(s"at://e$i-$j", s"ec$i-$j", "u u u unusual window window window window"),
+        null))
+      q.processAllAvailable()
+    }
+    try {
+      (1 to 2).foreach(epoch)
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val batches = q.recentProgress.count(_.numInputRows > 0)
+      (3 to 8).foreach(epoch)
+      assert(q.recentProgress.count(_.numInputRows > 0) - batches == 6)
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled,
+        "an epoch compiled new code: a per-epoch literal reached codegen")
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+        .lastExecution.executedPlan
+      assert(plan.collect { case e: Exchange => e }.isEmpty, plan.treeString)
+      assert(plan.collect { case s: StateStoreWriter => s }.isEmpty, plan.treeString)
+    } finally {
+      q.stop()
+      StubJetStream.drop("epochs-posts")
+      StubJetStream.drop("epochs-enriched")
+    }
   }
 
   /** ~200 posts over the marker alphabet: all three sentiments, gated
@@ -174,7 +284,8 @@ class StreamingEnrichSpec extends SparkSpec {
     val lastPlan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
       .lastExecution.optimizedPlan
     val calls = lastPlan.collect { case op =>
-      op.expressions.map(_.collect { case u: ScalaUDF => u }.size).sum }.sum
+      op.expressions.map(_.collect {
+        case u: ScalaUDF if u.udfName.contains("classify") => u }.size).sum }.sum
     q.stop()
     assert(calls == 1, lastPlan.treeString)
 
